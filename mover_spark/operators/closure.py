@@ -17,29 +17,35 @@ Reference semantics (all in /root/reference/etl/extractor.go):
 Spark re-design — KEY-SET semantics, not row-PK memoization. The reference
 assumes every table has a unique single-column PK (dialect/dialect.go:32-34);
 real data (our lineitem fixture) breaks that. Instead we memoize *access
-keys*: for each (table, access-column-tuple) pair we keep a DataFrame of key
-values already fetched; an edge expansion anti-joins its candidate keys
-against that set, then fetches rows by one semi-join per edge per iteration.
-Every fetched row is new by construction (fresh keys only), each key is
-fetched at most once per access path, and termination needs no PK at all.
-This subsumes the reference's query-result cache (extractor.go:146-165) —
-`query+args` memoization IS key-set memoization when queries are generated
-from keys.
+keys*: for each (table, access-column-tuple) pair we keep the key values
+already fetched; a round anti-joins its candidate keys against that set,
+then fetches rows by semi-join. Every fetched row is new by construction
+(fresh keys only), each key is fetched at most once per access path, and
+termination needs no PK at all. This subsumes the reference's query-result
+cache (extractor.go:146-165) — `query+args` memoization IS key-set
+memoization when queries are generated from keys.
 
-Scale: per iteration, one join per edge (Catalyst broadcasts small key sets);
-iteration count is bounded by the FK-graph diameter, not row count. Key sets
-are localCheckpoint'ed periodically to cut the iterative-lineage chain.
+Scale: rounds are bounded by the FK-graph diameter, not the row count. A
+round unions its semi-join fetches per target table and materializes each
+union once, as an eager local checkpoint whose row count is observed on the
+same job (no emptiness probe). Seen keys are projections of those
+checkpoints, so no round's plan embeds an earlier one: plans keep a
+constant size at any depth.
 """
 
 from __future__ import annotations
 
+import logging
 import re
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+
+log = logging.getLogger(__name__)
 
 #: `{attr}` template var — same regex as the reference (etl/sanitizer.go:15).
 ATTR_RE = re.compile(r"\{(?P<attr>\w+)\}")
@@ -108,62 +114,71 @@ class SchemaConfig:
 class _Frontier:
     table: str
     df: DataFrame
-    depth: int
+    seed: bool  # depth 0: reverse FKs fan out without an allowlist
+
+
+#: Tags each fetched row with the access path that fetched it, so a path
+#: records only its own keys as seen: an order fetched by o_orderkey says
+#: nothing about the other orders of its o_custkey.
+_PATH = "__closure_path"
 
 
 class _KeySets:
-    """seen[(table, cols)] -> DataFrame of already-fetched key tuples."""
+    """seen[(table, cols)] -> union of key projections of checkpoints, so
+    an anti-join against a seen set never re-plans an earlier round."""
 
     def __init__(self):
         self._sets: dict[tuple[str, tuple[str, ...]], DataFrame] = {}
-        #: per-key-set update counters: the lineage cut must fire on the
-        #: key set whose union chain actually grew 20 layers — one global
-        #: counter let a hot key reset it every round while a
-        #: touched-once-per-iteration set accumulated unbounded lineage
-        #: (linear plan depth -> quadratic planning -> StackOverflow on
-        #: deep FK graphs, exactly what the checkpoint exists to prevent)
-        self._since_checkpoint: dict[tuple[str, tuple[str, ...]], int] = {}
-        #: persisted union components per key set, released when a
-        #: localCheckpoint materializes the union and makes them dead —
-        #: without this every per-edge key batch stays pinned in executor
-        #: storage for the life of the extract
-        self._components: dict[tuple[str, tuple[str, ...]], list[DataFrame]] = {}
 
-    def novel(self, table: str, cols: list[str], keys: DataFrame) -> DataFrame:
-        """Anti-join `keys` against the seen set, record them, return the new
-        ones. Lazy on purpose — no action here: the caller's single fetch
-        materialization is the only job per edge (emptiness of the key set
-        surfaces there as an empty fetch)."""
+    def add(self, table: str, cols, keys: DataFrame) -> None:
         k = (table, tuple(cols))
-        keys = keys.dropDuplicates(cols)
-        seen = self._sets.get(k)
-        if seen is not None:
-            keys = keys.join(seen, on=cols, how="left_anti")
-        keys = keys.persist()
-        self._sets[k] = keys if seen is None else seen.unionByName(keys)
-        self._components.setdefault(k, []).append(keys)
-        self._since_checkpoint[k] = self._since_checkpoint.get(k, 0) + 1
-        if self._since_checkpoint[k] >= 20:  # cut iterative lineage
-            self._sets[k] = self._sets[k].localCheckpoint(eager=True)
-            self._since_checkpoint[k] = 0
-            for comp in self._components.pop(k, []):
-                comp.unpersist()
-        return keys
-
-    def record(self, table: str, cols: list[str], keys: DataFrame) -> None:
-        """Mark keys as seen without fetching (seeds memoize their own PKs,
-        extractor.go:96-103)."""
-        k = (table, tuple(cols))
-        keys = keys.dropDuplicates(cols)
         seen = self._sets.get(k)
         self._sets[k] = keys if seen is None else seen.unionByName(keys)
 
-    def filter_rows(self, table: str, cols: list[str], rows: DataFrame) -> DataFrame:
-        """Anti-join full rows against the seen set on `cols` (row-level
-        memoization across DIFFERENT access paths — the mover equivalent is
-        processedRelations keyed by PK, extractor.go:96-103)."""
+    def unseen(self, table: str, cols, rows: DataFrame) -> DataFrame:
+        """Anti-join `rows` against the seen set on `cols`."""
         seen = self._sets.get((table, tuple(cols)))
-        return rows if seen is None else rows.join(seen, on=cols, how="left_anti")
+        return rows if seen is None else rows.join(seen, on=list(cols), how="left_anti")
+
+
+def _checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """Materialize `df` as an eager local checkpoint; count it on the same job."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+    return df, obs.get["rows"]
+
+
+def _fetch(catalog: Catalog, seen: _KeySets, target: str, paths: dict) -> tuple[DataFrame, int]:
+    """One round's fetch of `target`: each access path's unseen candidate
+    keys semi-joined against the table, the paths unioned, materialized
+    once. Every fetched row is new on its path by construction."""
+    tgt = catalog.table(target)
+    pks = tuple(tgt.primary_keys)
+    parts = []
+    for i, (cols, cands) in enumerate(paths.items()):
+        # no dropDuplicates: semi- and anti-joins ignore duplicate keys
+        keys = seen.unseen(target, cols, reduce(DataFrame.unionByName, cands))
+        rows = catalog.df(target).join(keys, on=list(cols), how="left_semi")
+        parts.append(rows.withColumn(_PATH, F.lit(i)))
+    rows = reduce(DataFrame.unionByName, parts)
+    # Row-level memoization across access paths: a row already fetched by
+    # another path (orders by o_custkey, then via lineitem's FK by
+    # o_orderkey), or by two paths in this round, must not re-enter. Only
+    # valid when the PK is genuinely unique; lineitem keeps one copy per
+    # path (the sanitizer's PK-dedup is off for it too).
+    if tgt.pk_unique:
+        if any(cols != pks for cols in paths):
+            rows = seen.unseen(target, pks, rows)
+        if len(parts) > 1:
+            rows = rows.dropDuplicates(list(pks))
+    fetched, n = _checkpoint(rows)
+    if n:
+        for i, cols in enumerate(paths):
+            if not (tgt.pk_unique and cols == pks):
+                seen.add(target, cols, fetched.where(F.col(_PATH) == i).select(*cols))
+        if tgt.pk_unique:
+            seen.add(target, pks, fetched.select(*pks))
+    return fetched.drop(_PATH), n
 
 
 def extract_closure(
@@ -179,15 +194,13 @@ def extract_closure(
     reference dedups by PK only in the sanitize pass); rows fetched by the
     engine itself are duplicate-free per access path by construction.
 
-    Cache ownership (round-12 persist audit): the seed/fetched persists
-    back the RETURNED extract and the key-set persists back its lineage —
-    for a JDBC-sourced closure they are snapshot consistency, not just
-    speed (an unpersisted plan would re-query the live database on
-    recompute and could see different rows). Their lifetime is therefore
-    the caller's: release by unpersisting the returned frames (or stopping
-    the session) once the extract is materialized downstream. Key-set
-    union components are still released incrementally every 20 layers by
-    the lineage checkpoint above.
+    Cache ownership: every returned frame is a union of eager local
+    checkpoints (the seeds and each round's fetch of the table). For a
+    JDBC-sourced closure that is snapshot consistency, not just speed: a
+    checkpoint has no lineage back to the live database, so no later read
+    can see different rows. The closure never releases them. The caller
+    owns them; their blocks are freed once the caller drops the frames
+    (Spark's ContextCleaner) or stops the session.
     """
     schema_config = schema_config or {}
     seen = _KeySets()
@@ -196,23 +209,28 @@ def extract_closure(
     extracted: dict[str, DataFrame] = {}
     frontiers: list[_Frontier] = []
 
+    def _extracted(table: str, df: DataFrame) -> None:
+        # same table reached twice (two seeds, or a later round): UNION,
+        # don't overwrite — dropping earlier rows from the output while
+        # still expanding them would silently truncate the extract envelope
+        extracted[table] = (
+            df
+            if table not in extracted
+            else extracted[table].unionByName(df, allowMissingColumns=True)
+        )
+
     for t, df in seeds:
+        df, n = _checkpoint(df)
+        log.debug("closure seed %s: %d rows", t, n)
         pks = catalog.table(t).primary_keys
         # a seed query may project the PK away (the reference iterates the
         # row map and simply skips absent attrs, extractor.go:107-129) —
         # such seeds still expand, they just can't pre-memoize their PKs
         if all(c in df.columns for c in pks):
-            seen.record(t, pks, df.select(*pks))
-        df = df.persist()
-        frontiers.append(_Frontier(t, df, 0))
-        # same table seeded twice: UNION, don't overwrite — dropping the
-        # first seed's rows from the output while still expanding them
-        # would silently truncate the extract envelope
-        extracted[t] = (
-            df
-            if t not in extracted
-            else extracted[t].unionByName(df, allowMissingColumns=True)
-        )
+            seen.add(t, pks, df.select(*pks))
+        _extracted(t, df)
+        if n:
+            frontiers.append(_Frontier(t, df, seed=True))
 
     iteration = 0
     while frontiers:
@@ -222,52 +240,31 @@ def extract_closure(
                 f"closure did not converge in {max_iterations} iterations"
             )
 
-        # Merge same-(table, depth-class, column-set) frontiers to cut join
-        # count (the column set is part of the key so two seeds of one
-        # table with different projections merge with themselves, not
-        # against each other — unionByName would throw).
+        # Merge same-(table, seed, column-set) frontiers (the column set is
+        # part of the key so two seeds of one table with different
+        # projections merge with themselves, not against each other —
+        # unionByName would throw).
         merged: dict[tuple[str, bool, tuple[str, ...]], _Frontier] = {}
         for fr in frontiers:
-            key = (fr.table, fr.depth == 0, tuple(sorted(fr.df.columns)))
+            key = (fr.table, fr.seed, tuple(sorted(fr.df.columns)))
             if key in merged:
-                prev = merged[key]
-                merged[key] = _Frontier(
-                    fr.table, prev.df.unionByName(fr.df), min(prev.depth, fr.depth)
-                )
+                merged[key].df = merged[key].df.unionByName(fr.df)
             else:
                 merged[key] = fr
         frontiers = []
+        #: target -> access columns -> this round's candidate key frames
+        wanted: dict[str, dict[tuple[str, ...], list[DataFrame]]] = {}
 
-        for (table, _is_seed, _cols), fr in merged.items():
+        def _want(target: str, cols: list[str], keys: DataFrame) -> None:
+            wanted.setdefault(target, {}).setdefault(tuple(cols), []).append(keys)
+
+        for (table, _seed, _cols), fr in merged.items():
             rows = fr.df
             tmeta = catalog.table(table)
             cfg = schema_config.get(table, SchemaConfig(table))
 
-            def _fetch(target: str, cols: list[str], keys: DataFrame, depth: int):
-                new_keys = seen.novel(target, cols, keys)
-                tgt = catalog.table(target)
-                fetched = catalog.df(target).join(new_keys, on=cols, how="left_semi")
-                # Row-level memoization across access paths: a row already
-                # fetched by another key path (e.g. orders by o_custkey, then
-                # again via lineitem's FK by o_orderkey) must not re-enter.
-                # Only valid when the PK is genuinely unique.
-                if tgt.pk_unique and tuple(cols) != tuple(tgt.primary_keys):
-                    fetched = seen.filter_rows(target, tgt.primary_keys, fetched)
-                fetched = fetched.persist()
-                if fetched.isEmpty():
-                    fetched.unpersist()
-                    return
-                if tgt.pk_unique and tuple(cols) != tuple(tgt.primary_keys):
-                    seen.record(target, tgt.primary_keys, fetched.select(*tgt.primary_keys))
-                extracted[target] = (
-                    fetched
-                    if target not in extracted
-                    else extracted[target].unionByName(fetched)
-                )
-                frontiers.append(_Frontier(target, fetched, depth))
-
             # --- FK dereference (extractor.go:106-129): all non-null FK
-            # values of this batch, one semi-join per edge.
+            # values of this batch.
             for fk in tmeta.foreign_keys:
                 if fk.ref_table not in catalog.tables:
                     continue
@@ -282,12 +279,12 @@ def extract_closure(
                 keys = rows.where(cond).select(
                     *[F.col(c).alias(rc) for c, rc in zip(fk.cols, fk.ref_cols)]
                 )
-                _fetch(fk.ref_table, fk.ref_cols, keys, fr.depth + 2)
+                _want(fk.ref_table, fk.ref_cols, keys)
 
             # --- Reverse-FK fan-out (extractor.go:40-50,52-68): automatic
             # only for depth-0 rows unless the constraint name is allowlisted.
             ref_keys = []
-            if fr.depth == 0 and not cfg.omit_reference_keys:
+            if fr.seed and not cfg.omit_reference_keys:
                 ref_keys.extend(tmeta.reference_keys)
             for name in cfg.reference_keys:
                 for rk in tmeta.reference_keys:
@@ -299,7 +296,7 @@ def extract_closure(
                 keys = rows.select(
                     *[F.col(p).alias(c) for p, c in zip(rk.parent_cols, rk.child_cols)]
                 )
-                _fetch(rk.child_table, rk.child_cols, keys, fr.depth + 2)
+                _want(rk.child_table, rk.child_cols, keys)
 
             # --- Config queries (extractor.go:70-79): any conjunction of
             # equality/IN templates compiles to ONE multi-column semi-join;
@@ -314,9 +311,8 @@ def extract_closure(
                     and all(attr in rows.columns for _, attr in compiled[1])
                 ):
                     pairs = compiled[1]
-                    cols = [c for c, _ in pairs]
                     keys = rows.select(*[F.col(a).alias(c) for c, a in pairs])
-                    _fetch(qtable, cols, keys, fr.depth + 1)
+                    _want(qtable, [c for c, _ in pairs], keys)
                 else:
                     tmpl_attrs = set(ATTR_RE.findall(template))
                     missing = sorted(tmpl_attrs - set(rows.columns))
@@ -362,17 +358,19 @@ def extract_closure(
                         if sub.isEmpty():
                             sub.unpersist()
                             continue
-                        extracted[qtable] = (
-                            sub
-                            if qtable not in extracted
-                            else extracted[qtable].unionByName(sub)
-                        )
+                        _extracted(qtable, sub)
                         # a target outside the catalog still extracts, but
                         # can't expand (no FK metadata to walk)
                         if qtable in catalog.tables:
-                            frontiers.append(
-                                _Frontier(qtable, sub, fr.depth + 1)
-                            )
+                            frontiers.append(_Frontier(qtable, sub, seed=False))
+
+        # one materialization per target table per round
+        for target, paths in wanted.items():
+            fetched, n = _fetch(catalog, seen, target, paths)
+            log.debug("closure round %d: %s +%d rows", iteration, target, n)
+            if n:
+                _extracted(target, fetched)
+                frontiers.append(_Frontier(target, fetched, seed=False))
 
     return extracted
 
@@ -401,8 +399,6 @@ def _format_value(v) -> str:
 def closure_summary(extracted: dict[str, DataFrame]) -> DataFrame:
     """Per-table row counts of an extract — stable, oracle-checkable shape.
     One union-of-counts job instead of one count action per table."""
-    from functools import reduce
-
     counts = [
         df.agg(F.count(F.lit(1)).alias("row_count")).select(
             F.lit(t).alias("table_name"), "row_count"

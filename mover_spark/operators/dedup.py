@@ -1810,9 +1810,10 @@ _LSH_PAIR_CACHE: dict = {}
 #: threshold, slice_base, max_miss) — shared by the pruned and unpruned
 #: arms (the prune is exact, so both verify to identical output from
 #: either candidate set; see containment_lsh). Entries are eager
-#: localCheckpoints: lineage-free, so eviction/clear RELEASES the blocks
-#: via _release_local_checkpoint and any stale un-materialized plan that
-#: still references one fails LOUDLY (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
+#: localCheckpoints: lineage-free. Eviction only drops the reference, so
+#: a result the caller holds stays readable; clear_dedup_caches RELEASES
+#: the blocks via _release_local_checkpoint, after which any stale plan
+#: that still references one fails LOUDLY (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
 #: instead of recomputing — never corrupts. Candidate-sized (pairs, two
 #: longs each), far below the signature relations the _SIG_CACHE holds.
 _CAND_CACHE: dict = {}
@@ -1830,13 +1831,15 @@ _CAND_CACHE_MAX = int(os.environ.get("MOVER_SPARK_CAND_CACHE_MAX", "4"))
 
 
 def _cand_cache_put(key, df: DataFrame) -> DataFrame:
-    """_cache_put for checkpoint-backed entries: eviction must release
-    the checkpoint RDD's storage blocks (df.unpersist() is a no-op on a
-    checkpointed frame — there is no cache entry, only RDD blocks)."""
+    """_cache_put for checkpoint-backed entries. Eviction drops only the
+    memo's reference: a containment result the caller still holds reads
+    the checkpoint, so releasing its blocks here would kill that result
+    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). ContextCleaner frees the blocks
+    once no frame references them; clear_dedup_caches still releases."""
     if _CAND_CACHE_MAX <= 0:
         return df  # memoization off: caller's checkpoint lives until GC
     while _CAND_CACHE and len(_CAND_CACHE) >= _CAND_CACHE_MAX:
-        _release_local_checkpoint(_CAND_CACHE.pop(next(iter(_CAND_CACHE))))
+        _CAND_CACHE.pop(next(iter(_CAND_CACHE)))
     _CAND_CACHE[key] = df
     return df
 

@@ -46,12 +46,32 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: Upper bound of the default driver heap.
+MAX_DRIVER_MEMORY_MB = 16 * 1024
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else half the host's RAM
+    (``MemTotal``) capped at 16g. The JVM's own overhead and the Python
+    workers come on top of the heap, so a heap sized to the whole host lets
+    one runaway query take the machine down. Without a readable meminfo
+    (non-Linux) the default is the cap."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return f"{MAX_DRIVER_MEMORY_MB}m"
+    return f"{min(kb // 2048, MAX_DRIVER_MEMORY_MB)}m"
+
+
 def get_spark(app_name: str = "mover-spark", cpus: str | None = None) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "128MB")

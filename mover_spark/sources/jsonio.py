@@ -15,11 +15,10 @@ parallel by every executor. ``read_envelopes`` consumes both layouts.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 ENVELOPE_MANIFEST = "_envelope.json"
@@ -62,15 +61,13 @@ def write_envelope(
     os.makedirs(out_dir, exist_ok=True)
     if partitioned:
         path = os.path.join(out_dir, table_name)
-        df.write.mode("overwrite").json(path)
-        # count what was WRITTEN, not a recompute of df's plan — for a
-        # non-deterministic upstream (e.g. dropDuplicates) a second run of
-        # the plan could disagree with the files on disk
-        parts = glob.glob(os.path.join(path, "part-*"))
-        # Spark's JSON writer emits one record per line (JSON Lines), so a
-        # line count IS the row count — no need to re-parse every field of
-        # the extract against the schema just to count it
-        n = df.sparkSession.read.text(parts).count() if parts else 0
+        # count what was WRITTEN, observed on the write job itself — not a
+        # recompute of df's plan (for a non-deterministic upstream, e.g.
+        # dropDuplicates, a second run could disagree with the files on
+        # disk) and not a read-back job over the part files
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").json(path)
+        n = obs.get["rows"]
         with open(os.path.join(path, ENVELOPE_MANIFEST), "w") as f:
             json.dump({"table_name": table_name, "count": n}, f, indent="\t")
         return path

@@ -3,6 +3,8 @@ exercised on the star-schema fixture (the part the reference never tested)."""
 
 import duckdb
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mover_spark.operators.closure import SchemaConfig, extract_closure
@@ -314,3 +316,183 @@ def test_same_template_two_tables_extracts_both(spark, catalog):
     # region2 gets exactly the config-query row (region additionally
     # receives nation's FK-fetched parent, so counts differ by design)
     assert out["region2"].count() == 1
+
+
+def _employee_chain(spark, path, depth):
+    """Employees 1..depth, each managed by the previous one, plus one
+    report of the tail (depth+1) and that report's report (depth+2)."""
+    from mover_spark.catalog import Catalog
+
+    rows = [(i, i - 1 if i > 1 else None) for i in range(1, depth + 3)]
+    spark.createDataFrame(rows, "id long, manager_id long").write.mode(
+        "overwrite"
+    ).parquet(f"{path}/employee.parquet")
+    return Catalog(
+        spark,
+        str(path),
+        sidecar={
+            "employee": {
+                "pk": ["id"],
+                "fks": [{"cols": ["manager_id"], "ref": "employee", "ref_cols": ["id"]}],
+            }
+        },
+        register_views=False,
+    )
+
+
+def _plan_shape(df):
+    """(height, join count) of a frame's analyzed plan."""
+    lines = df._jdf.queryExecution().analyzed().treeString().splitlines()
+    height = max(len(line) - len(line.lstrip(" :+-")) for line in lines) // 3
+    return height, sum("Join" in line for line in lines)
+
+
+def test_deep_self_reference_chain(spark, tmp_path):
+    """A self-referencing FK followed 12 rounds deep extracts the exact
+    chain, and its returned plans do not grow with the depth: each round
+    reads checkpoints, never the rounds before it."""
+    shapes = {}
+    for depth in (4, 12):
+        cat = _employee_chain(spark, tmp_path / f"d{depth}", depth)
+        seed = cat.df("employee").where(F.col("id") == depth)
+        out = extract_closure(spark, cat, [("employee", seed)])
+        ids = [r.id for r in out["employee"].collect()]
+        # the manager chain up to the head, plus the seed's direct report
+        # (depth-0 reverse FK) but not that report's report
+        assert sorted(ids) == list(range(1, depth + 2))
+        shapes[depth] = max(_plan_shape(df) for df in out.values())
+    (h4, j4), (h12, j12) = shapes[4], shapes[12]
+    assert h12 <= h4 + 1 and j12 <= j4, shapes
+
+
+#: acct.parent -> acct (self-reference), acct.bid -> bank, txn.aid -> acct;
+#: txn's declared PK (tid) repeats, so it is not pk_unique.
+_GRAPH_KEYS = {
+    "acct": {
+        "pk": ["id"],
+        "fks": [
+            {"cols": ["parent"], "ref": "acct", "ref_cols": ["id"]},
+            {"cols": ["bid"], "ref": "bank", "ref_cols": ["id"]},
+        ],
+    },
+    "bank": {"pk": ["id"], "fks": []},
+    "txn": {
+        "pk": ["tid"],
+        "pk_unique": False,
+        "fks": [{"cols": ["aid"], "ref": "acct", "ref_cols": ["id"]}],
+    },
+}
+#: the row identity compared per table (txn's PK is not one)
+_ROW_ID = {"acct": "id", "bank": "id", "txn": "rid"}
+
+
+@st.composite
+def _fk_graphs(draw):
+    n_acct = draw(st.integers(1, 7))
+    n_bank = draw(st.integers(1, 3))
+    maybe = lambda n: st.one_of(st.none(), st.integers(1, n))  # noqa: E731
+    tables = {
+        "acct": [
+            {"id": i, "parent": draw(maybe(n_acct)), "bid": draw(maybe(n_bank))}
+            for i in range(1, n_acct + 1)
+        ],
+        "bank": [{"id": i} for i in range(1, n_bank + 1)],
+        "txn": [
+            {"rid": i, "tid": draw(st.integers(1, 3)), "aid": draw(maybe(n_acct))}
+            for i in range(1, draw(st.integers(0, 7)) + 1)
+        ],
+    }
+    seed_table = draw(st.sampled_from([t for t, rows in tables.items() if rows]))
+    ids = [r[_ROW_ID[seed_table]] for r in tables[seed_table]]
+    seed_ids = draw(st.sets(st.sampled_from(ids), min_size=1))
+    allow = draw(st.sets(st.sampled_from(["acct_fk_parent", "txn_fk_aid"])))
+    return tables, seed_table, seed_ids, sorted(allow)
+
+
+def _closure_bfs(tables, seed_table, seed_ids, allow):
+    """The documented semantics as a row-at-a-time BFS: every row follows
+    its non-null FKs; reverse FKs fan out from seed rows, and from any
+    acct row for the allowlisted names."""
+    edges = [
+        (t, fk["cols"], fk["ref"], fk["ref_cols"])
+        for t, meta in _GRAPH_KEYS.items()
+        for fk in meta["fks"]
+    ]
+
+    def matches(table, cols, vals):
+        if None in vals:
+            return []
+        return [r for r in tables[table] if [r[c] for c in cols] == vals]
+
+    todo = [
+        (seed_table, r, True)
+        for r in tables[seed_table]
+        if r[_ROW_ID[seed_table]] in seed_ids
+    ]
+    done, reached = set(), {}
+    while todo:
+        table, row, seed = todo.pop()
+        key = (table, row[_ROW_ID[table]], seed)
+        if key in done:
+            continue
+        done.add(key)
+        reached.setdefault(table, set()).add(row[_ROW_ID[table]])
+        for child, cols, parent, pcols in edges:
+            if child == table:
+                hits = matches(parent, pcols, [row[c] for c in cols])
+                todo += [(parent, r, False) for r in hits]
+            if parent == table and (seed or f"{child}_fk_{cols[0]}" in allow):
+                hits = matches(child, cols, [row[c] for c in pcols])
+                todo += [(child, r, False) for r in hits]
+    return reached
+
+
+def _accts(*parents):
+    return {
+        "acct": [{"id": i, "parent": p, "bid": None} for i, p in enumerate(parents, 1)],
+        "bank": [{"id": 1}],
+        "txn": [],
+    }
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(graph=_fk_graphs())
+# acct 2 comes twice in round 1: as seed 1's parent and as its child
+@example(graph=(_accts(2, 1), "acct", {1}, []))
+# round 1 fetches acct 2 by id and acct 3 by parent; acct 2's parent (4)
+# is not a seen parent key, so acct 4's fan-out still reaches acct 5
+@example(graph=(_accts(2, 4, 1, None, 4), "acct", {1}, ["acct_fk_parent"]))
+def test_closure_matches_python_bfs(spark, tmp_path, graph):
+    """On random small FK graphs (a self-reference, cycles, null FKs and a
+    non-unique-PK table) the closure's per-table row sets equal a
+    pure-Python BFS of the documented semantics, and pk_unique tables
+    come back without duplicate rows."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mover_spark.catalog import Catalog
+
+    tables, seed_table, seed_ids, allow = graph
+    d = tmp_path / uuid.uuid4().hex
+    d.mkdir()
+    for name, rows in tables.items():
+        cols = list(rows[0]) if rows else ["rid", "tid", "aid"]
+        pq.write_table(
+            pa.table({c: pa.array([r[c] for r in rows], pa.int64()) for c in cols}),
+            str(d / f"{name}.parquet"),
+        )
+    cat = Catalog(spark, str(d), sidecar=_GRAPH_KEYS, register_views=False)
+    seed = cat.df(seed_table).where(F.col(_ROW_ID[seed_table]).isin(sorted(seed_ids)))
+    cfg = {"acct": SchemaConfig("acct", reference_keys=allow)}
+    out = extract_closure(spark, cat, [(seed_table, seed)], cfg)
+
+    got = {}
+    for t, df in out.items():
+        ids = [r[0] for r in df.select(_ROW_ID[t]).collect()]
+        if cat.table(t).pk_unique:
+            assert len(ids) == len(set(ids)), (t, ids)
+        if ids:
+            got[t] = set(ids)
+    assert got == _closure_bfs(tables, seed_table, seed_ids, allow)

@@ -1133,6 +1133,32 @@ def test_containment_candidate_memo_shared_across_arms(spark):
     D.clear_dedup_caches()
 
 
+
+def test_containment_result_survives_candidate_eviction(spark, monkeypatch):
+    """A containment_lsh result the caller still holds must stay readable
+    after a later call evicts its candidate memo entry: eviction drops the
+    memo's reference only, it does not release the checkpoint blocks the
+    result reads."""
+    from mover_spark.operators import dedup as D
+
+    D.clear_dedup_caches()
+    monkeypatch.setattr(D, "_CAND_CACHE_MAX", 1)
+
+    def corpus(tag):
+        a = " ".join(f"{tag}{i}" for i in range(21))
+        b = " ".join(f"{tag}{i}" for i in range(20)) + " " + " ".join(
+            f"x{tag}{i}" for i in range(10)
+        )
+        return spark.createDataFrame([(1, a), (2, b)], "doc_id long, text string")
+
+    first = D.containment_lsh(corpus("p"), 0.9)
+    rows = sorted(map(tuple, first.collect()))
+    assert rows, "fixture must produce containment pairs"
+    D.containment_lsh(corpus("q"), 0.9).collect()  # evicts the first entry
+    assert len(D._CAND_CACHE) == 1
+    assert sorted(map(tuple, first.collect())) == rows
+    D.clear_dedup_caches()
+
 def test_dup_marked_memo_shared_and_spans_kernel_identical(spark):
     """Optimization r14: (a) substring_dup_spans and substring_dedup_clean
     share ONE memoized marked-positions relation per (corpus, min_len);
