@@ -1,5 +1,6 @@
 """Benchmark harness: times every queries() entry at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+SPARK_GRAFT_CPUS defaults to the process's CPU affinity count.
 
 Prints ONE COMPACT machine-parsable JSON line as the LAST stdout line:
     {"metric": "suite_seconds", "value": <total>, "unit": "sec",
@@ -42,8 +43,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("mover-spark-bench")
+    cpus = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = entrymod.queries()

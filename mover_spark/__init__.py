@@ -5,7 +5,7 @@ similarity search, text analysis, event windowing).
 
 Layout
 ------
-- ``session``    SparkSession factory tuned for local[32] + cluster-safe confs
+- ``session``    SparkSession factory sized to the host's CPUs + cluster-safe confs
 - ``catalog``    Table/Column/FK metadata (mover's dynamic-introspection posture;
                  reference: dialect/dialect.go:23-107) backed by parquet fixtures
                  + an FK sidecar

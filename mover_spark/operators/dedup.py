@@ -777,6 +777,17 @@ def _inner_small_gate(
     return est_bytes <= cap
 
 
+def _size_slice(n: Column, slice_base: float) -> Column:
+    """Geometric size slice floor(log_w(n)) of a shingle-set size. Every
+    side that compares slices computes it through this one expression, so
+    boundary rounding cannot disagree."""
+    import math as _math
+
+    return F.floor(
+        F.log2(n.cast("double")) / F.lit(_math.log2(slice_base))
+    ).cast("int")
+
+
 def _deep_containment_candidates(
     reps_sl: DataFrame,
     threshold: float,
@@ -785,6 +796,7 @@ def _deep_containment_candidates(
     outer_ok: DataFrame | None = None,
     inner_small: bool = False,
     tok_df: DataFrame | None = None,
+    slice_bounds: tuple[int | None, int | None] | None = None,
 ) -> DataFrame:
     """EXACT candidate generation for the deep-asymmetry stratum
     (slice_b - slice_a > k_floor) — the asymmetric prefix filter of
@@ -813,25 +825,23 @@ def _deep_containment_candidates(
     reps_sl: (doc, hs, n, slice) representatives. ``inner_ok`` /
     ``outer_ok`` (optional single-column (doc) frames) restrict each join
     side to pair-eligible docs — see containment_lsh's prune_unique for
-    the exactness argument; the stratum bounds then come from the
-    ELIGIBLE sides (an ineligible extreme doc cannot form a deep pair, so
-    shrinking the window is lossless). Lossless for its stratum — the
-    overall operator's recall loss is confined to the banded shallow
-    classes' per-class <= max_miss."""
+    the exactness argument. ``slice_bounds`` is (min slice over the inner
+    side, max slice over the outer side), which the prune pass's stats
+    agg computes over the ELIGIBLE sides (an ineligible extreme doc cannot
+    form a deep pair, so shrinking the window is lossless); without it
+    one agg takes both bounds over all of ``reps_sl``. Lossless for its
+    stratum — the overall operator's recall loss is confined to the
+    banded shallow classes' per-class <= max_miss."""
     a_reps = (
         reps_sl.join(inner_ok, "doc", "left_semi") if inner_ok is not None else reps_sl
     )
     b_reps = (
         reps_sl.join(outer_ok, "doc", "left_semi") if outer_ok is not None else reps_sl
     )
-    if inner_ok is None and outer_ok is None:
-        row = reps_sl.agg(
-            F.min("slice").alias("lo"), F.max("slice").alias("hi")
-        ).collect()[0]
-        lo_v, hi_v = row.lo, row.hi
+    if slice_bounds is None:
+        lo_v, hi_v = reps_sl.agg(F.min("slice"), F.max("slice")).collect()[0]
     else:
-        lo_v = a_reps.agg(F.min("slice")).collect()[0][0]
-        hi_v = b_reps.agg(F.max("slice")).collect()[0][0]
+        lo_v, hi_v = slice_bounds
     if lo_v is None or hi_v is None or hi_v - lo_v <= k_floor:
         # no pair of slices spans the deep stratum — empty, typed off the
         # input so any id type unions cleanly with the banded candidates
@@ -1086,21 +1096,6 @@ def containment_lsh(
     size-ratio class the containment threshold maps to a Jaccard floor a
     class-specific band scheme can serve. Shares _hashed_shingles with
     the exact operator (one corpus pass, memoized)."""
-    import math as _math
-    import time as _time
-
-    # dev-only stage timer (MOVER_SPARK_CONTAIN_DEBUG=1): wall-clock per
-    # materialization boundary, for the optimization-round profiling work
-    _dbg = os.environ.get("MOVER_SPARK_CONTAIN_DEBUG") == "1"
-    _t0 = _time.time()
-
-    def _mark(label: str) -> None:
-        nonlocal _t0
-        if _dbg:
-            now = _time.time()
-            print(f"[contain {label}] +{now - _t0:.2f}s", flush=True)
-            _t0 = now
-
     # THE PER-SCHEME FORCED GC IS SCALE-GATED (optimization r13): the
     # System.gc() nudge exists to reclaim the sf100 regime's 60+ GB of
     # band-shuffle files between schemes; band-row volume is a small
@@ -1114,7 +1109,6 @@ def containment_lsh(
         _CONTAIN_SEQ_MIN_INPUT,
     )
     reps, members = _containment_reps(df, text_col, id_col)
-    _mark("reps-built(lazy)")
     # SHARED CANDIDATE RELATION ACROSS ARMS (optimization r14, VERDICT
     # r13 next #2; the _LSH_PAIR_CACHE / _freq_sorted_docs pattern): the
     # checkpointed candidate pair set is memoized per (corpus, threshold,
@@ -1134,11 +1128,9 @@ def containment_lsh(
     if candidates is None:
         candidates = _containment_candidates(
             df, reps, threshold, text_col, id_col, slice_base, max_miss,
-            prune_unique, sequential_schemes, _mark,
+            prune_unique, sequential_schemes,
         )
         candidates = _cand_cache_put(ckey, candidates)
-    else:
-        _mark("candidates(memo-hit)")
 
     sha = reps.select(F.col("doc").alias("doc_inner"), F.col("hs").alias("hs_a"))
     shb = reps.select(F.col("doc").alias("doc_outer"), F.col("hs").alias("hs_b"))
@@ -1202,7 +1194,6 @@ def _containment_candidates(
     max_miss: float,
     prune_unique: bool,
     sequential_schemes: bool,
-    _mark,
 ) -> DataFrame:
     """Build containment_lsh's checkpointed candidate pair set (band
     schemes + pair-free pruning + the exact deep arm) — the body
@@ -1226,12 +1217,8 @@ def _containment_candidates(
     # namespaced by the global band offset, so cross-scheme slot reuse
     # never aliases a bucket key)
     n_slots = max(r * n_bands for r, (n_bands, _) in schemes.items())
-    slice_den = F.lit(_math.log2(slice_base))
     sig = _containment_signatures(df, text_col, id_col, n_slots=n_slots).withColumn(
-        # geometric size slice: floor(log_w(n)); both join sides compute
-        # it identically so boundary rounding cannot disagree
-        "slice",
-        F.floor(F.log2(F.col("n").cast("double")) / slice_den).cast("int"),
+        "slice", _size_slice(F.col("n"), slice_base)
     )
     k_band = max(k for _, ks in schemes.values() for k in ks)
 
@@ -1261,6 +1248,7 @@ def _containment_candidates(
     inner_ok = outer_ok = None
     tok_df = None
     prune_frame = None
+    slice_bounds = None
     if prune_unique and threshold > 0:
         toks = reps.select("doc", F.explode("hs").alias("tok"))
         # full per-token document frequency: feeds BOTH the df>=2 shared
@@ -1301,9 +1289,11 @@ def _containment_candidates(
             .localCheckpoint(eager=True)
         )
         prune_frame = both
+        sl = _size_slice(F.col("__n"), slice_base)
+        outer = F.col("__shared") >= 1
         stats = both.agg(
             F.count(F.lit(1)).alias("n_reps"),
-            F.sum((F.col("__shared") >= 1).cast("long")).alias("n_outer"),
+            F.sum(outer.cast("long")).alias("n_outer"),
             F.sum(F.col("__inner").cast("long")).alias("n_inner"),
             # per-inner deep-arm prefix length: n - ceil(t*n) + q tokens
             # (the rare-first branch's explode/broadcast volume)
@@ -1318,12 +1308,17 @@ def _containment_candidates(
                     ),
                 ).otherwise(F.lit(0))
             ).alias("inner_prefix_toks"),
+            # the deep arm's slice window, over all reps and over each
+            # eligible side (the vacuity drop below picks which applies)
+            F.min(sl).alias("lo_all"),
+            F.max(sl).alias("hi_all"),
+            F.min(F.when(F.col("__inner"), sl)).alias("lo_inner"),
+            F.max(F.when(outer, sl)).alias("hi_outer"),
         ).collect()[0]
         n_reps = int(stats["n_reps"] or 0)
         n_outer = int(stats["n_outer"] or 0)
         n_inner = int(stats["n_inner"] or 0)
         inner_prefix_toks = int(stats["inner_prefix_toks"] or 0)
-        _mark("prune-pass")
         # ADAPTIVE VACUITY DROP: a filter that keeps (almost) everything
         # buys nothing and still costs one semi-join shuffle per consumer
         # — on the 30-word standard fixture BOTH filters keep ~100% and
@@ -1332,7 +1327,11 @@ def _containment_candidates(
         if n_inner < 0.95 * n_reps:
             inner_ok = both.where("__inner").select("doc")
         if n_outer < 0.95 * n_reps:
-            outer_ok = both.where(F.col("__shared") >= 1).select("doc")
+            outer_ok = both.where(outer).select("doc")
+        slice_bounds = (
+            stats["lo_all" if inner_ok is None else "lo_inner"],
+            stats["hi_all" if outer_ok is None else "hi_outer"],
+        )
     # SMALL-INNER REGIME: few docs can possibly be contained (the
     # realistic-corpus shape — most documents are mostly-unique). The
     # a-side band-key set and prefix-token set are then broadcast-sized,
@@ -1450,7 +1449,6 @@ def _containment_candidates(
             .localCheckpoint(eager=True)
         )
         cand_parts.append(part)
-        _mark(f"scheme-r{r}")
         if sequential_schemes:
             # the big shuffle's files are reclaimed once its
             # ShuffleDependency is unreachable; the ContextCleaner reacts
@@ -1461,7 +1459,6 @@ def _containment_candidates(
             # would reclaim are input-bytes-scale (MBs), and each forced
             # full GC is a measured driver-blocking pause per scheme.
             sig.sparkSession._jvm.System.gc()
-            _mark(f"scheme-r{r}-gc")
     cands = cand_parts[0]
     for part in cand_parts[1:]:
         cands = cands.unionByName(part)
@@ -1478,7 +1475,7 @@ def _containment_candidates(
     reps_sl = reps.join(sig.select("doc", "n", "slice"), "doc")
     deep = _deep_containment_candidates(
         reps_sl, threshold, k_band, inner_ok=inner_ok, outer_ok=outer_ok,
-        inner_small=inner_small, tok_df=tok_df,
+        inner_small=inner_small, tok_df=tok_df, slice_bounds=slice_bounds,
     )
     # own the cache lifecycle (VERDICT r11 wrong #4): tok_df is a
     # distinct-shingle-sized relation and this function holds the only
@@ -1512,7 +1509,6 @@ def _containment_candidates(
         _release_local_checkpoint(_part)
     if prune_frame is not None:
         _release_local_checkpoint(prune_frame)
-    _mark("candidates(deep+union)")
     return candidates
 
 

@@ -4,9 +4,17 @@ The driver hands our entrypoints an existing SparkSession, so tuning is split:
 ``get_spark`` builds a session for tests/bench; ``tune`` applies the
 runtime-settable confs to ANY session (driver-provided included).
 
-Scale posture: AQE on (runtime coalesce + skew-join), shuffle partitions sized
-by env, UTC timezone so timestamp semantics match the DuckDB oracle, Arrow on
-for the few pandas-UDF paths.
+Scale posture: AQE on (runtime coalesce + skew-join), shuffle partitions equal
+to the session's task slots, UTC timezone so timestamp semantics match the
+DuckDB oracle, Arrow on for the few pandas-UDF paths.
+
+Task slots are ``sparkContext.defaultParallelism``: N for ``local[N]`` (N is
+``SPARK_GRAFT_CPUS``, else the process's CPU affinity count), the executor
+cores for a cluster session. Shuffle width is the per-job fan-out every
+operator pays, and it also fixes the partition count of every persisted memo
+and eager ``localCheckpoint``, which AQE cannot coalesce later (see the
+``canChangeCachedPlanOutputPartitioning`` note below). A fixed width wider
+than the slots only multiplies per-task fixed cost on small jobs.
 """
 
 from __future__ import annotations
@@ -15,14 +23,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
-
 #: Confs settable at runtime on a live session.
 RUNTIME_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # dims (region/nation/supplier/part at our SFs) should broadcast
@@ -37,8 +42,14 @@ RUNTIME_CONF = {
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent)."""
-    for k, v in RUNTIME_CONF.items():
+    """Apply runtime confs to an existing session (idempotent), and size
+    shuffles to the session's task slots."""
+    confs = dict(RUNTIME_CONF)
+    try:
+        confs["spark.sql.shuffle.partitions"] = str(spark.sparkContext.defaultParallelism)
+    except AttributeError:
+        pass  # a Spark Connect session has no SparkContext — keep its width
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -66,8 +77,15 @@ def driver_memory(meminfo: str = "/proc/meminfo") -> str:
     return f"{min(kb // 2048, MAX_DRIVER_MEMORY_MB)}m"
 
 
+def default_cpus() -> str:
+    """``SPARK_GRAFT_CPUS`` if set, else the number of CPUs this process may
+    run on (its affinity mask, which a container's cpuset narrows below the
+    host's core count)."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(app_name: str = "mover-spark", cpus: str | None = None) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or default_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -12,7 +12,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("mover-spark-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark("mover-spark-tests")
     yield spark
     spark.stop()
 

@@ -1,6 +1,8 @@
 """The session factory's host-derived defaults."""
 
-from mover_spark.session import driver_memory
+import os
+
+from mover_spark.session import default_cpus, driver_memory, tune
 
 
 def _meminfo(tmp_path, kb):
@@ -28,3 +30,27 @@ def test_driver_memory_without_meminfo_is_the_cap(tmp_path, monkeypatch):
 def test_driver_memory_env_overrides(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
     assert driver_memory(_meminfo(tmp_path, 15 * 1024 * 1024)) == "3g"
+
+
+def test_default_cpus_is_the_affinity_count(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == str(len(os.sched_getaffinity(0)))
+
+
+def test_default_cpus_env_overrides(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == "3"
+
+
+def test_tune_sizes_shuffles_to_task_slots(spark):
+    slots = str(spark.sparkContext.defaultParallelism)
+    key = "spark.sql.shuffle.partitions"
+    tune(spark)
+    assert spark.conf.get(key) == slots
+    other = str(int(slots) * 8 + 1)
+    spark.conf.set(key, other)
+    try:
+        tune(spark)
+        assert spark.conf.get(key) == slots
+    finally:
+        spark.conf.set(key, slots)

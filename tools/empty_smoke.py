@@ -43,18 +43,10 @@ def main() -> int:
     ap.add_argument("--only", default="")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as e
+    from mover_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("empty-smoke")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .getOrCreate()
-    )
+    spark = get_spark("empty-smoke")
     dest = tempfile.mkdtemp(prefix="empty_sf_")
     failures: list[tuple[str, str]] = []
     try:

@@ -33,7 +33,7 @@ def main() -> int:
         if len(sys.argv) > 2
         else os.path.join(repo, ".bench", "quarantine_landing")
     )
-    spark = get_spark("quarantine-bench", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("quarantine-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     src = os.path.join(landing, "jsonl")

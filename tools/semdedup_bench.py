@@ -73,7 +73,7 @@ def main() -> int:
         if len(sys.argv) > 2
         else os.path.join(repo, ".bench", f"semdedup_{n}")
     )
-    spark = get_spark("semdedup-bench", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("semdedup-bench")
     spark.sparkContext.setLogLevel("ERROR")
     path = os.path.join(fix_dir, "embeddings.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):

@@ -48,7 +48,7 @@ def main() -> int:
 
     n = int(sys.argv[1])
     budget = int(sys.argv[2]) if len(sys.argv) > 2 else 131072
-    spark = get_spark("subdiv-parity", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("subdiv-parity")
     spark.sparkContext.setLogLevel("ERROR")
     fix_dir = os.path.join(REPO, ".bench", f"semdedup_{n}")
     path = os.path.join(fix_dir, "embeddings.parquet")

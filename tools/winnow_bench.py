@@ -28,7 +28,7 @@ def main() -> None:
     sf_dir = sys.argv[1]
     hash_fn = sys.argv[2]
     op = sys.argv[3] if len(sys.argv) > 3 else "profile"
-    spark = get_spark("winnow_bench", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("winnow_bench")
     docs = Catalog(spark, sf_dir).df("documents")
     from pyspark.sql import functions as F
 

@@ -95,7 +95,7 @@ def main() -> int:
         if len(sys.argv) > 3
         else os.path.join(repo, ".bench", f"zipf_contain_sf{factor / 10:g}")
     )
-    spark = get_spark("zipf-contain", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("zipf-contain")
     spark.sparkContext.setLogLevel("ERROR")
     path = _ensure_fixture(spark, factor, out_dir)
     if op == "build":
