@@ -966,6 +966,110 @@ def test_containment_releases_intermediate_checkpoints(spark):
     D.clear_dedup_caches()
 
 
+def test_containment_cold_build_one_checkpoint_per_stage(spark, monkeypatch):
+    """A cold containment_lsh build materializes exactly two frames — the
+    prune pass's doc frame and the union-level candidate set — with every
+    band scheme in one relation, and reads the prune stats through an
+    observation on the prune checkpoint rather than a driver collect."""
+    from mover_spark.operators import dedup as D
+
+    D.clear_dedup_caches()
+    a_text = " ".join(f"w{i}" for i in range(21))
+    b_text = " ".join(f"w{i}" for i in range(20)) + " " + " ".join(
+        f"b{i}" for i in range(10)
+    )
+    noise = [(200 + i, " ".join(f"u{i}_{j}" for j in range(30))) for i in range(40)]
+    df = spark.createDataFrame(
+        [(1, a_text), (2, b_text)] + noise, "doc_id long, text string"
+    )
+    assert len(D._containment_band_schemes(
+        0.95, 2.0 ** 0.5, 5e-3, D.N_CONTAIN_MINHASH,
+        max_class=D.contain_band_boundary(0.95),
+    )) >= 2, "fixture must band more than one scheme"
+    df_cls = type(spark.range(1))
+    orig_checkpoint, orig_collect = df_cls.localCheckpoint, df_cls.collect
+    eager_builds, collects = [], []
+
+    def recording_checkpoint(self, eager=True, *a, **k):
+        if eager:
+            eager_builds.append(self)
+        return orig_checkpoint(self, eager, *a, **k)
+
+    def recording_collect(self):
+        collects.append(self)
+        return orig_collect(self)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", recording_checkpoint)
+    monkeypatch.setattr(df_cls, "collect", recording_collect)
+    out = D.containment_lsh(df, 0.95, prune_unique=True)
+    assert len(eager_builds) == 2, (
+        f"{len(eager_builds)} eager local checkpoints, expected 2"
+    )
+    assert not collects, f"{len(collects)} driver collect(s) before the result"
+    monkeypatch.undo()
+    assert (1, 2) in {(r.doc_inner, r.doc_outer) for r in out.collect()}
+    D.clear_dedup_caches()
+
+
+def test_containment_band_keys_contract(spark):
+    """_band_keys: a query and a container share a band key exactly when
+    they agree on (global band, that band's r values, slice gap within the
+    scheme's classes). Equal values at another band index or in another
+    scheme are namespaced apart, and a slice gap outside every class
+    shares nothing."""
+    from mover_spark.operators.dedup import _band_keys
+
+    # r=4 x 3 bands serving class 0 (+ negative class -1), r=3 x 2 bands
+    # serving class 1; signatures are 12 slots long
+    schemes = {4: (3, [0]), 3: (2, [1])}
+    a_keys, b_keys = _band_keys(schemes, k_neg=-1)
+
+    def sig(base):
+        return [base + i for i in range(12)]
+
+    same = [7] * 12
+    band1 = sig(100)
+    band1[4:8] = [1, 2, 3, 4]  # r=4 band 1 reads slots 4..7
+    band0 = sig(200)
+    band0[0:4] = [1, 2, 3, 4]  # the same values at r=4 band 0
+    rows = [
+        (1, 10, 5, sig(0)),
+        (2, 10, 5, [x if 4 <= i < 8 else x + 50 for i, x in enumerate(sig(0))]),
+        (3, 10, 5, band1),
+        (4, 10, 5, band0),
+        (10, 10, 5, same),
+        (11, 10, 5, same),  # gap 0: r=4 classes
+        (12, 10, 6, same),  # gap 1: r=3 class
+        (13, 10, 4, same),  # gap -1: r=4's negative class
+        (14, 10, 7, same),  # gap 2: outside every class
+        (15, 10, 3, same),  # gap -2: below the negative class
+    ]
+    frame = spark.createDataFrame(
+        rows, "doc long, n int, slice int, mhs array<bigint>"
+    )
+    keys = {
+        r.doc: (r.a, r.b)
+        for r in frame.select("doc", a_keys.alias("a"), b_keys.alias("b")).collect()
+    }
+
+    def shared(q, c):
+        return set(keys[q][0]) & set(keys[c][1])
+
+    # agreement in r=4 band 1 only -> exactly that band's key, which sits
+    # at global band 1 of the container's key array
+    (k,) = shared(1, 2)
+    assert keys[2][1].index(k) == 1
+    # the same values at band 0 vs band 1 never share a key
+    assert not shared(3, 4) and not shared(4, 3)
+    # constant signatures: every band's values are equal, yet the global
+    # band index keeps every key of a doc distinct across bands and schemes
+    assert len(set(keys[10][1])) == len(keys[10][1]) == 3 + 2
+    assert len(shared(10, 11)) == 3  # gap 0: the r=4 scheme's bands only
+    assert len(shared(10, 12)) == 2  # gap 1: the r=3 scheme's bands only
+    assert len(shared(10, 13)) == 3  # gap -1: r=4 owns the negative class
+    assert not shared(10, 14) and not shared(10, 15)
+
+
 def test_freq_sorted_docs_shared_and_memoized(spark):
     """Optimization r13 (guide §5/§2.4): ngram_jaccard_pairs and
     containment_pairs derive their prefix-filter inputs from ONE memoized
@@ -1056,36 +1160,6 @@ def test_inner_small_gate_on_estimated_volume():
     # ...but past the cap the same tiny-doc shape flips OFF honestly
     # (50k x 144 + 500k = 7.7M keys ~ 493 MB > 256 MB at 64 B/key)
     assert not _inner_small_gate(spark, schemes, 0.95, 2.0, 50_000, 500_000)
-
-
-def test_containment_sequential_gate_output_identical(spark, catalog):
-    """Optimization r13: the band stage's per-scheme sequential
-    materialization (eager checkpoint + forced GC per scheme) is gated on
-    estimated input bytes — the one-DAG small-corpus form must produce a
-    row-identical result (same union of per-scheme distinct candidate
-    sets feeding the same exact verification)."""
-    from mover_spark.operators.dedup import clear_dedup_caches, containment_lsh
-
-    docs = catalog.df("documents")
-    key = "spark.mover.contain.sequentialMinInputBytes"
-
-    def run():
-        return {
-            (r.doc_inner, r.doc_outer, r.containment)
-            for r in containment_lsh(docs, 0.95).collect()
-        }
-
-    # fixture is far below the default gate -> one-DAG path
-    one_dag = run()
-    clear_dedup_caches()
-    spark.conf.set(key, "1")  # force the sequential sf100 shape
-    try:
-        sequential = run()
-    finally:
-        spark.conf.unset(key)
-        clear_dedup_caches()
-    assert one_dag, "fixture should contain containment pairs"
-    assert sequential == one_dag
 
 
 def test_containment_candidate_memo_shared_across_arms(spark):
