@@ -803,15 +803,11 @@ def _q_dedup_triangles(spark, sf_dir):
 
 
 def _q_dedup_clusters_star(spark, sf_dir):
-    """Same clustering through the large-star/small-star CC (Kiveris et al.,
-    SoCC'14) — O(log^2 n) rounds independent of component diameter, the
-    scale-safe path for adversarial chain-shaped dup graphs. Checked against
-    the identical recursive-CTE oracle as dedup_clusters."""
+    """dedup_clusters at threshold 0.8 under its own query name, checked
+    against the same recursive-CTE oracle as dedup_clusters."""
     from mover_spark.operators.dedup import dedup_clusters
 
-    return dedup_clusters(
-        _catalog(spark, sf_dir).df("documents"), threshold=0.8, method="star"
-    )
+    return dedup_clusters(_catalog(spark, sf_dir).df("documents"), threshold=0.8)
 
 
 def _q_ann_ivf(spark, sf_dir):

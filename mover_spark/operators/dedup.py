@@ -31,6 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 def _conf_bytes(spark, key: str, default: int) -> int:
@@ -630,6 +631,19 @@ def _containment_band_schemes(
     return best
 
 
+def _nonempty_hashed_shingles(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(doc, hs): the xxhash64'd 2-shingles of every doc that has any.
+    The filter is the shingle UDF's own non-empty condition (at least two
+    space-separated tokens), evaluated on the text before the UDF runs: a
+    filter on hs is pushed below the projection, and the UDF then runs
+    twice per doc."""
+    n = 2
+    return df.where(F.size(F.split(F.col(text_col), " ")) >= n).select(
+        F.col(id_col).alias("doc"),
+        F.transform(shingles_udf(n)(F.col(text_col)), lambda s: F.xxhash64(s)).alias("hs"),
+    )
+
+
 def _containment_reps(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
@@ -663,14 +677,9 @@ def _containment_reps(
     kt = _dedup_cache_key(df, "containment_tagged", text_col, id_col)
     tagged = _cache_get(_SIG_CACHE, kt)
     if tagged is None:
-        base = df.select(
-            F.col(id_col).alias("doc"),
-            F.transform(
-                shingles_udf()(F.col(text_col)), lambda s: F.xxhash64(s)
-            ).alias("hs"),
-        ).where(F.size("hs") > 0)
         tagged = (
-            base.select("doc", "hs", F.xxhash64(F.array_sort("hs")).alias("sd"))
+            _nonempty_hashed_shingles(df, text_col, id_col)
+            .select("doc", "hs", F.xxhash64(F.array_sort("hs")).alias("sd"))
             .withColumn("rep", F.min("doc").over(Window.partitionBy("sd")))
             .select("doc", "hs", "rep")
             .persist()
@@ -1873,16 +1882,7 @@ def _hashed_shingles(
     hit = _cache_get(_SIG_CACHE, key)
     if hit is not None:
         return hit
-    sh = (
-        df.select(
-            F.col(id_col).alias("doc"),
-            F.transform(
-                shingles_udf()(F.col(text_col)), lambda s: F.xxhash64(s)
-            ).alias("hs"),
-        )
-        .where(F.size("hs") > 0)
-        .persist()
-    )
+    sh = _nonempty_hashed_shingles(df, text_col, id_col).persist()
     return _cache_put(_SIG_CACHE, key, sh, _SIG_CACHE_MAX)
 
 
@@ -2412,203 +2412,122 @@ def qcosine(a: Column, b: Column) -> Column:
     )
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Cluster near-dup pairs into components by min-label propagation:
-    every node converges to the smallest doc id reachable from it.
+#: Edge count at or below which connected_components labels the graph on
+#: the driver in one step instead of running another star round. The edges
+#: cross as two int64 Arrow columns: 2M edges are 32 MB, and the driver's
+#: union-find holds a few index arrays of the same order on top. Every
+#: graph the queries and the pipeline benchmark build is far smaller: the
+#: largest, embedding_dup_clusters', has 919 edges at sf0.1 and 181,620
+#: at a 10x replica of it.
+_CC_FINISH_EDGES = 2_000_000
 
-    Driver-side loop of pure DataFrame ops (Spark has no native iteration):
-    per round, each node takes min(own label, min neighbor label); stops
-    when a round changes nothing. Rounds needed = graph diameter — near-dup
-    components are tiny cliques, so 2-3 rounds in practice. For adversarial
-    long-chain graphs at 100 TB, switch to the large-star/small-star
-    alternation (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) which converges in O(log^2 n); the propagation step
-    below is its building block.
 
-    Returns (node, cluster_id) for every node that appears in `pairs`.
-    """
-    cols = pairs.columns[:2]
-    # undirected edge list in ONE pass over `pairs` (a union of fwd+reversed
-    # would evaluate the upstream pair pipeline twice).
-    # localCheckpoint (eager) truncates lineage every round — without it the
-    # plan tree deepens per iteration and overflows the JVM stack near round
-    # ~10; on a real cluster prefer reliable checkpoint() to survive executor
-    # loss during long convergences
-    a, b = F.col(cols[0]), F.col(cols[1])
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(a.alias("src"), b.alias("dst")),
-                    F.struct(b.alias("src"), a.alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .localCheckpoint()
-    )
-    # near-dup graphs are tiny relative to the corpus: size the per-round
-    # shuffles to the edge count instead of inheriting the global
-    # shuffle-partition setting (one partition per task slot x N rounds of
-    # ~KB data is pure scheduling overhead; at real scale the count grows
-    # the width)
-    n_edges = edges.count()
-    parts = max(1, min(int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-                       n_edges // 500_000 + 1))
-    edges = edges.repartition(parts, "dst").localCheckpoint()
-    labels = (
-        edges.select(F.col("src").alias("node"))
+def connected_components(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
+    """Cluster the undirected graph of `pairs` (its first two columns)
+    into connected components. Returns (node, cluster_id) for every node
+    that appears in `pairs`, with cluster_id the smallest node of its
+    component; a node that appears only in self-pairs is its own cluster,
+    and a NULL end contributes no node.
+
+    The distinct edges are materialized once, as an eager local
+    checkpoint whose row count is observed on the same job. While more
+    than _CC_FINISH_EDGES remain, each round runs one large-star +
+    small-star step (Kiveris et al., "Connected Components in MapReduce
+    and Beyond", SoCC'14), which converges in O(log^2 n) rounds whatever
+    the diameter; once the edges fit the driver they are read through
+    Arrow and labelled by _min_labels, a vectorized union-find. The small
+    result is a driver-built relation: it holds no checkpoint blocks, so
+    no later release or memo eviction can invalidate it.
+
+    Edges are held as (u, v) with v <= u. A round:
+    - large-star(x): m = min(N(x) + {x}); every neighbor y > x, and x
+      itself, is linked to m;
+    - small-star(u): m = min of u's edges; u and every v it links to are
+      linked to m.
+    Both keep every node (a root keeps a (r, r) self-loop) and connectivity,
+    and only lower the far end of an edge, so the fixpoint is a forest of
+    stars child -> root with the component minimum as root. An input is
+    that forest exactly when no node has a smaller neighbor together with
+    a larger one or a second smaller one; each round observes the number
+    of such nodes in its input, so the round that finds none has
+    reproduced the forest, which is the labelling; that result reads the
+    last round's checkpoint. Rounds beyond `max_iter` raise RuntimeError."""
+    from .closure import _checkpoint
+
+    a, b = (F.col(c) for c in pairs.columns[:2])
+    edges, n_edges = _checkpoint(
+        pairs.select(F.greatest(a, b).alias("u"), F.least(a, b).alias("v"))
+        .where(F.col("v").isNotNull())
         .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
     )
-    spark = edges.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        labels = _propagate(edges, labels, max_iter)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
-
-
-def _propagate(edges: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:
     for _ in range(max_iter):
-        nbr_min = (
-            edges.join(
-                labels.select(F.col("node").alias("dst"), F.col("label").alias("dst_label")),
-                on=["dst"],
-            )
-            .groupBy("src")
-            .agg(F.min("dst_label").alias("nbr_label"))
-        )
-        # carry the previous label through the checkpoint so the
-        # convergence check is a scan of the checkpointed leaf, not an
-        # extra node-keyed join per round (optimization r13: the old
-        # nxt-join-labels changed-check was one full join + shuffle per
-        # iteration, ~40% of each round's jobs on clique-shaped graphs)
-        nxt = (
-            labels.join(nbr_min, labels.node == nbr_min.src, "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias("label"),
-                F.col("label").alias("__old"),
-            )
-            .localCheckpoint()
-        )
-        changed = nxt.where(F.col("label") < F.col("__old")).limit(1).count()
-        labels = nxt.select("node", "label")
-        if changed == 0:
+        if n_edges <= _CC_FINISH_EDGES:
             break
-    return labels
-
-
-def connected_components_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
-    """Connected components by large-star/small-star alternation (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14 — public
-    algorithm, re-derived here in DataFrame ops). Same output contract as
-    ``connected_components``: (node, cluster_id=component minimum) for every
-    node appearing in `pairs`.
-
-    Why a second implementation: min-label propagation needs O(diameter)
-    rounds — fine for near-dup cliques, quadratic-feeling on adversarial
-    long chains. The star alternation converges in O(log^2 n) rounds
-    REGARDLESS of diameter:
-    - large-star(u): attach every neighbor v > u to m = min(N(u) ∪ {u})
-    - small-star(u): over edges directed larger->smaller, attach u and all
-      its smaller neighbors to m
-    Each step strictly preserves connectivity (every emitted edge links two
-    nodes already connected through u) and monotonically lowers labels, so
-    the fixpoint is a forest of stars rooted at component minima.
-
-    Scale notes: each round is two groupBy-min + joins on the CURRENT edge
-    set (which shrinks toward one edge per node); localCheckpoint per round
-    truncates iterative lineage exactly like the propagation loop.
-    """
-    cols = pairs.columns[:2]
-    e = (
-        pairs.select(F.col(cols[0]).alias("u"), F.col(cols[1]).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    if e.isEmpty():
-        # self-pairs only: every node is its own cluster
-        return (
-            pairs.select(F.col(cols[0]).alias("node"))
-            .distinct()
-            .withColumn("cluster_id", F.col("node"))
+        obs = Observation()
+        both = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        star = (
+            both.groupBy("u")
+            .agg(
+                F.least(F.min("v"), F.col("u")).alias("m"),
+                F.greatest(F.max("v"), F.col("u")).alias("hi"),
+                F.max(F.when(F.col("v") < F.col("u"), F.col("v"))).alias("lo"),
+            )
+            .observe(
+                obs,
+                F.count_if(
+                    (F.col("m") < F.col("u")) & ((F.col("hi") > F.col("u")) | (F.col("lo") != F.col("m")))
+                ).alias("open"),
+            )
         )
-
-    def large_star(edges: DataFrame) -> DataFrame:
-        bidir = edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        large = (
+            both.where(F.col("v") > F.col("u"))
+            .join(star, "u")
+            .select(F.col("v").alias("u"), "m")
+            .unionAll(star.select("u", "m"))
+            .select("u", F.col("m").alias("v"))
         )
-        mins = (
-            bidir.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("mv", F.col("u")).alias("m"))
-        )
-        return (
-            bidir.where(F.col("v") > F.col("u"))
-            .join(mins, "u")
+        small = large.groupBy("u").agg(F.min("v").alias("m"))
+        nxt, n_edges = _checkpoint(
+            large.join(small, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
+            .unionAll(small.select("u", F.col("m").alias("v")))
             .distinct()
         )
-
-    def small_star(edges: DataFrame) -> DataFrame:
-        d = edges.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins = d.groupBy("u").agg(F.min("v").alias("m"))
-        attached = d.join(mins, "u").select(
-            F.col("v").alias("u"), F.col("m").alias("v")
-        )
-        self_edges = mins.select("u", F.col("m").alias("v"))
-        return (
-            attached.unionAll(self_edges)
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    # edge count carried across rounds (optimization r13, guide §1.2:
-    # fewer actions per iteration) — e is checkpointed so re-counting it
-    # was cheap but still one scheduled job per round; the previous
-    # round's nxt.count() IS this round's e.count()
-    e_count = e.count()
-    for _ in range(max_iter):
-        nxt = small_star(large_star(e)).localCheckpoint()
-        nxt_count = nxt.count()
-        same_size = nxt_count == e_count
-        if same_size and nxt.exceptAll(e).isEmpty():
-            e = nxt
-            break
-        e = nxt
-        e_count = nxt_count
-    else:
-        raise RuntimeError(
-            f"star connected-components did not converge in {max_iter} rounds"
-        )
-
-    # converged: a forest of stars child->root; roots label themselves
-    labeled = (
-        e.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
-        .unionAll(e.select(F.col("v").alias("node"), F.col("v").alias("cluster_id")))
-        .distinct()
+        _release_local_checkpoint(edges)
+        edges = nxt
+        if obs.get["open"] == 0:
+            return edges.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
+    if n_edges > _CC_FINISH_EDGES:
+        raise RuntimeError(f"connected components did not converge in {max_iter} rounds")
+    tbl = edges.toArrow()
+    _release_local_checkpoint(edges)
+    nodes, roots = _min_labels(tbl.column("u").to_numpy(), tbl.column("v").to_numpy())
+    node_type = edges.schema["u"].dataType
+    return pairs.sparkSession.createDataFrame(
+        pd.DataFrame({"node": nodes, "cluster_id": roots}),
+        StructType([StructField("node", node_type), StructField("cluster_id", node_type)]),
     )
-    # nodes appearing ONLY in self-pairs were dropped with the self-edges;
-    # they are their own singleton clusters (contract parity with the
-    # propagation implementation)
-    all_nodes = (
-        pairs.select(F.col(cols[0]).alias("node"))
-        .unionAll(pairs.select(F.col(cols[1]).alias("node")))
-        .distinct()
-    )
-    singletons = all_nodes.join(labeled, "node", "left_anti").withColumn(
-        "cluster_id", F.col("node")
-    )
-    return labeled.unionAll(singletons)
+
+
+def _min_labels(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(nodes, component minimum per node) of the edge list u[i] - v[i].
+    Nodes are indexed in sorted order, so the smallest index of a component
+    is its smallest node. Each pass hooks the larger root of every edge to
+    the smaller one and pointer-jumps until every node points at a root;
+    a pass that leaves an edge across two roots strictly lowers one of
+    them, so the passes end."""
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    iu, iv = idx[: len(u)], idx[len(u):]
+    parent = np.arange(len(nodes))
+    while True:
+        ru, rv = parent[iu], parent[iv]
+        if np.array_equal(ru, rv):
+            return nodes, nodes[parent]
+        low = np.minimum(ru, rv)
+        np.minimum.at(parent, ru, low)
+        np.minimum.at(parent, rv, low)
+        while not np.array_equal(jumped := parent[parent], parent):
+            parent = jumped
 
 
 def dedup_clusters(
@@ -2616,19 +2535,13 @@ def dedup_clusters(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    method: str = "propagation",
 ) -> DataFrame:
     """End-to-end near-dup clustering: MinHash-LSH candidate pairs (exact-
     Jaccard verified) -> connected components -> (doc_id, cluster_id) with
-    the component minimum as the canonical keeper id.
-
-    `method`: "propagation" (min-label, O(diameter) rounds — optimal for the
-    tiny cliques near-dup graphs form) or "star" (large-star/small-star,
-    O(log^2 n) rounds — the safe choice when component shape is unknown)."""
+    the component minimum as the canonical keeper id."""
     pairs = minhash_lsh_pairs(df, threshold=threshold, text_col=text_col, id_col=id_col)
-    cc = connected_components_star if method == "star" else connected_components
     return (
-        cc(pairs.select("doc_a", "doc_b"))
+        connected_components(pairs.select("doc_a", "doc_b"))
         .select(F.col("node").alias(id_col), "cluster_id")
     )
 
@@ -2638,7 +2551,6 @@ def dedup_keep_canonical(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    method: str = "propagation",
 ) -> DataFrame:
     """The corpus-output step of near-dedup: drop every near-dup cluster
     member except its canonical keeper (the component-minimum id);
@@ -2651,9 +2563,7 @@ def dedup_keep_canonical(
     broadcasts it when it fits (the common case, leaving the corpus
     unshuffled) and falls back to a shuffled anti-join when a pathological
     dup rate makes it large — no forced hint, so neither case OOMs."""
-    clusters = dedup_clusters(
-        df, threshold=threshold, text_col=text_col, id_col=id_col, method=method
-    )
+    clusters = dedup_clusters(df, threshold=threshold, text_col=text_col, id_col=id_col)
     drop = clusters.where(F.col(id_col) != F.col("cluster_id")).select(id_col)
     return df.join(drop, id_col, "left_anti")
 
@@ -2664,7 +2574,6 @@ def dedup_keep_best(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    method: str = "propagation",
 ) -> DataFrame:
     """dedup_keep_canonical with a QUALITY-aware keeper: per near-dup
     cluster keep the member maximizing `quality_col` (ties -> smallest
@@ -2683,9 +2592,7 @@ def dedup_keep_best(
     max(), so a NULL-quality member never beats a scored one and an
     all-NULL cluster degrades to the tie-break (keep the smallest id,
     i.e. dedup_keep_canonical's behavior)."""
-    clusters = dedup_clusters(
-        df, threshold=threshold, text_col=text_col, id_col=id_col, method=method
-    )
+    clusters = dedup_clusters(df, threshold=threshold, text_col=text_col, id_col=id_col)
     members = clusters.join(
         df.select(F.col(id_col), F.col(quality_col).alias("__q")), id_col
     )

@@ -66,7 +66,6 @@ def leakage_safe_split(
     text_col: str = "text",
     splits: dict[str, float] | None = None,
     threshold: float = 0.8,
-    method: str = "propagation",
 ) -> DataFrame:
     """hash_split with a CONTAMINATION GUARANTEE: the split bucket is
     computed on the near-dup cluster's canonical id (dedup_clusters),
@@ -86,10 +85,7 @@ def leakage_safe_split(
     input columns plus `split`."""
     from .dedup import dedup_clusters
 
-    clusters = dedup_clusters(
-        df, threshold=threshold, text_col=text_col, id_col=id_col,
-        method=method,
-    )
+    clusters = dedup_clusters(df, threshold=threshold, text_col=text_col, id_col=id_col)
     keyed = df.join(clusters, id_col, "left").withColumn(
         "__skey", F.coalesce(F.col("cluster_id"), F.col(id_col))
     )

@@ -1652,8 +1652,9 @@ def semantic_dedup(
     16 cells: the kernel verified 11.5M pairs in 34 s where the
     interpreted per-pair fold had not finished at 590 s (sf10 A/B,
     BASELINE.md round-10 second session). Component labels come from
-    dedup.connected_components
-    (near-dup components are tiny cliques; rounds = diameter)."""
+    dedup.connected_components: a pair graph within its finish bound (2M
+    edges) is labelled on the driver in one step, a larger one first runs
+    large-star/small-star rounds."""
     import numpy as np
     import pandas as pd
 

@@ -1,7 +1,10 @@
 """Connected-components clustering and IVF ANN on constructed cases."""
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from mover_spark.operators import dedup
 from mover_spark.operators.dedup import connected_components, dedup_clusters
 from mover_spark.operators.similarity import brute_force_topk, ivf_topk
 
@@ -68,41 +71,74 @@ def test_ivf_probe_all_cells_is_exact(catalog):
     assert exact == full
 
 
-def test_star_cc_matches_propagation_on_shapes(spark):
-    """Large-star/small-star (Kiveris et al.) must produce identical labels
-    to min-label propagation on chains, cycles, islands, self-loops."""
-    from mover_spark.operators.dedup import connected_components_star
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10), (20, 21), (30, 30)],
-        "doc_a long, doc_b long",
-    )
-    want = {r.node: r.cluster_id for r in connected_components(pairs).collect()}
-    got = {r.node: r.cluster_id for r in connected_components_star(pairs).collect()}
-    assert got == want
-    assert got[30] == 30  # self-loop-only node is a singleton cluster
+#: Spark jobs of connected_components on a small graph plus one collect
+#: of its result, as measured (the edge checkpoint, the edge read to the
+#: driver and the collect).
+MAX_SMALL_CC_JOBS = 3
 
 
-def test_star_cc_long_chain_bounded_rounds(spark):
+def _reference_components(edges):
+    """node -> smallest node of its component, by a plain union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+#: connected_components' finish bound on each side of the tests: as
+#: shipped (a small graph goes straight to the driver union-find), and 0,
+#: so the large-star / small-star rounds run to their fixpoint.
+SIDES = {"finish": dedup._CC_FINISH_EDGES, "star": 0}
+
+
+def _each_side(monkeypatch):
+    for side, bound in SIDES.items():
+        monkeypatch.setattr(dedup, "_CC_FINISH_EDGES", bound)
+        yield side
+
+
+def _components(pairs, **kw):
+    rows = connected_components(pairs, **kw).collect()
+    got = {r.node: r.cluster_id for r in rows}
+    assert len(got) == len(rows), "a node is labelled twice"
+    return got
+
+
+def test_star_cc_matches_propagation_on_shapes(spark, monkeypatch):
+    """Chains, cycles, islands and a self-loop-only node, against the
+    reference union-find."""
+    edges = [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10), (20, 21), (30, 30)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    for side in _each_side(monkeypatch):
+        got = _components(pairs)
+        assert got == _reference_components(edges), side
+        assert got[30] == 30  # self-loop-only node is a singleton cluster
+
+
+def test_star_cc_long_chain_bounded_rounds(spark, monkeypatch):
     """The adversarial case: a 200-node chain has diameter 200, but the star
     alternation must converge in O(log^2 n) — well under 15 rounds (plain
     propagation would need ~200)."""
-    from mover_spark.operators.dedup import connected_components_star
-
     n = 200
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
     )
-    got = connected_components_star(pairs, max_iter=15).collect()
-    assert {r.cluster_id for r in got} == {0}
-    assert len(got) == n + 1
+    for side in _each_side(monkeypatch):
+        got = connected_components(pairs, max_iter=15).collect()
+        assert {r.cluster_id for r in got} == {0}, side
+        assert len(got) == n + 1
 
 
-def test_star_cc_random_graphs_property(spark):
-    """Property check on deterministic pseudo-random graphs: star labels ==
-    propagation labels (the two independent implementations agree)."""
-    from mover_spark.operators.dedup import connected_components_star
-
+def test_star_cc_random_graphs_property(spark, monkeypatch):
+    """Deterministic pseudo-random graphs, against the reference union-find."""
     # LCG-generated edges: deterministic, seedable, no RNG state in tests
     def lcg(seed):
         while True:
@@ -119,12 +155,54 @@ def test_star_cc_random_graphs_property(spark):
         g = lcg(seed)
         edges = [(next(g) % n_nodes, next(g) % n_nodes) for _ in range(n_edges)]
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        want = {r.node: r.cluster_id for r in connected_components(pairs).collect()}
-        got = {
-            r.node: r.cluster_id
-            for r in connected_components_star(pairs).collect()
-        }
-        assert got == want, f"seed={seed}"
+        for side in _each_side(monkeypatch):
+            assert _components(pairs) == _reference_components(edges), f"seed={seed} {side}"
+
+
+def test_cc_empty_pairs(spark, monkeypatch):
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    for side in _each_side(monkeypatch):
+        out = connected_components(pairs)
+        assert out.collect() == [], side
+        assert out.schema.simpleString() == "struct<node:bigint,cluster_id:bigint>"
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 30), st.integers(0, 30)), min_size=1, max_size=40
+    )
+)
+def test_cc_duplicate_and_reversed_edges(spark, monkeypatch, edges):
+    """Each edge is fed twice, once reversed: the labels are those of the
+    edge list itself."""
+    doubled = edges + [(b, a) for a, b in edges]
+    pairs = spark.createDataFrame(doubled, "doc_a long, doc_b long")
+    for side in _each_side(monkeypatch):
+        assert _components(pairs) == _reference_components(edges), side
+
+
+def test_cc_small_graph_jobs_blocks_and_conf(spark):
+    """A small graph is labelled in a fixed handful of Spark jobs, leaves no
+    storage blocks behind and writes no session conf."""
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10), (20, 21)],
+        "doc_a long, doc_b long",
+    )
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    stored = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+    group = "test-cc-small-graph"
+    sc.setJobGroup(group, "connected_components on a small graph")
+    try:
+        got = _components(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= MAX_SMALL_CC_JOBS
+    assert {i.id() for i in sc._jsc.sc().getRDDStorageInfo()} <= stored
+    assert spark.conf.get(key) == width
 
 
 def test_ivf_trained_centroids_recall(spark):

@@ -1299,3 +1299,38 @@ def test_dup_marked_memo_shared_and_spans_kernel_identical(spark):
     assert got[4][1] == 0  # zero-dup doc attached by the left join
     D.clear_dedup_caches()
     assert not any("dup_marked" in str(k) for k in D._SIG_CACHE)
+
+
+def test_shingle_udf_runs_once_per_doc(spark):
+    """Both shingle builds evaluate the shingle UDF once per doc (one
+    ArrowEvalPython node; a filter on the shingle array itself is pushed
+    below the projection and runs the UDF a second time) and keep the rows
+    of that filter on edge texts: null, empty, one word, a double space, a
+    trailing space."""
+    from mover_spark.operators import dedup as D
+
+    D.clear_dedup_caches()
+    df = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "one"), (4, "a  b"), (5, "a b "), (6, "x y z"), (7, "x y z")],
+        "doc_id long, text string",
+    )
+    want = (
+        df.select(
+            F.col("doc_id").alias("doc"),
+            F.transform(D.shingles_udf()(F.col("text")), lambda s: F.xxhash64(s)).alias("hs"),
+        )
+        .where(F.size("hs") > 0)
+        .collect()
+    )
+    assert sorted(r.doc for r in want) == [4, 5, 6, 7]
+    shingles = D._hashed_shingles(df)
+    tagged = D._containment_reps(df)[0]
+    for built in (shingles, tagged):
+        plan = built._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, plan
+    assert sorted(map(tuple, shingles.collect())) == sorted(map(tuple, want))
+    # docs 6 and 7 share a shingle set: one representative
+    assert sorted(map(tuple, tagged.collect())) == sorted(
+        (r.doc, r.hs) for r in want if r.doc != 7
+    )
+    D.clear_dedup_caches()

@@ -102,8 +102,8 @@ def build_tables(cat: Catalog, factor: int) -> dict:
             df = df.repartition(64)
         t[name] = df.drop("__rep").persist()
         t[name].count()  # materialize outside the timed region
-    # the CC probes measure component-finding, not candidate generation:
-    # their edge input (the LSH pair list at this factor) is built here,
+    # the CC probe measures component-finding, not candidate generation:
+    # its edge input (the LSH pair list at this factor) is built here,
     # outside the timed region
     from mover_spark.operators.dedup import minhash_lsh_pairs
 
@@ -152,16 +152,10 @@ def op_minhash_lsh(t, cat):
     return minhash_lsh_pairs(t["documents"])
 
 
-def op_cc_propagation(t, cat):
+def op_connected_components(t, cat):
     from mover_spark.operators.dedup import connected_components
 
     return connected_components(t["__edges"])
-
-
-def op_cc_star(t, cat):
-    from mover_spark.operators.dedup import connected_components_star
-
-    return connected_components_star(t["__edges"])
 
 
 def op_ivf_topk(t, cat):
@@ -230,8 +224,7 @@ OPS = {
     "q1_decimal_agg": op_q1_decimal_agg,
     "salted_agg": op_salted_agg,
     "minhash_lsh": op_minhash_lsh,
-    "cc_propagation": op_cc_propagation,
-    "cc_star": op_cc_star,
+    "connected_components": op_connected_components,
     "ivf_topk": op_ivf_topk,
     "interval_join": op_interval_join,
     "token_packing": op_token_packing,
