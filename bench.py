@@ -29,6 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
+from mover_spark import memo
 from mover_spark.session import get_spark
 
 REPO_DIR = os.path.dirname(os.path.abspath(__file__))
@@ -129,24 +130,13 @@ def main() -> None:
     # medians among cache-consumer queries, which is what this knob
     # isolates.
 
-    def clear_session_caches():
-        from mover_spark.operators.dedup import clear_dedup_caches
-        from mover_spark.operators.retrieval import clear_retrieval_caches
-        from mover_spark.operators.similarity import clear_similarity_caches
-        from mover_spark.operators.text import clear_text_caches
-
-        clear_dedup_caches()
-        clear_retrieval_caches()
-        clear_similarity_caches()
-        clear_text_caches()
-
     runs: dict[str, list[float]] = {}
     timings: dict[str, float] = {}
     load: dict[str, list[float] | None] = {}
     steal: dict[str, int | None] = {}
     for name, fn in qs.items():
         if cold:
-            clear_session_caches()
+            memo.clear()
         load[name] = loadavg()  # host noise sampled at each query's start
         s0 = steal_jiffies()
         samples: list[float] = []
@@ -194,6 +184,7 @@ def main() -> None:
                 "movers_vs_prev": movers,
                 "movers_mode_mismatch": mode_mismatch,
                 "cold": cold,
+                "memo": memo.stats(),
             },
             f,
             indent=1,

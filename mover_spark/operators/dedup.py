@@ -24,7 +24,6 @@ results are bit-stable across partitionings and engines.
 
 from __future__ import annotations
 
-import os
 import random
 
 import numpy as np
@@ -33,6 +32,9 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
+
+from .. import memo
+
 
 def _conf_bytes(spark, key: str, default: int) -> int:
     """Parse a Spark size conf ("64MB", "10485760b", "-1") to bytes;
@@ -674,17 +676,17 @@ def _containment_reps(
     Storage level stays the default MEMORY_AND_DISK: a DISK_ONLY variant
     re-deserialized the array columns on every one of the ~6 consumer
     scans and measured 3x slower end-to-end at sf10 (276.7 vs 93.8 s)."""
-    kt = _dedup_cache_key(df, "containment_tagged", text_col, id_col)
-    tagged = _cache_get(_SIG_CACHE, kt)
-    if tagged is None:
-        tagged = (
+
+    def build() -> DataFrame:
+        return (
             _nonempty_hashed_shingles(df, text_col, id_col)
             .select("doc", "hs", F.xxhash64(F.array_sort("hs")).alias("sd"))
             .withColumn("rep", F.min("doc").over(Window.partitionBy("sd")))
             .select("doc", "hs", "rep")
             .persist()
         )
-        tagged = _cache_put(_SIG_CACHE, kt, tagged, _SIG_CACHE_MAX)
+
+    tagged = memo.cached(df, "containment_tagged", text_col, id_col, build=build)
     reps = tagged.where(F.col("doc") == F.col("rep")).select("doc", "hs")
     members = tagged.select("rep", "doc")
     return reps, members
@@ -705,20 +707,19 @@ def _containment_signatures(
     caller's band schemes actually index (threshold-dependent — 195 of
     256 at t=0.9) trims both the numpy kernel and the Arrow transfer,
     which bound this stage."""
-    key = _dedup_cache_key(df, "containment_sig256", text_col, id_col, n_slots)
-    hit = _cache_get(_SIG_CACHE, key)
-    if hit is not None:
-        return hit
-    reps, _ = _containment_reps(df, text_col, id_col)
-    mh = minhash_signature_udf(CONTAIN_A[:n_slots], CONTAIN_B[:n_slots])
-    sig = reps.select(
-        "doc",
-        F.size("hs").alias("n"),
-        mh(
-            F.transform("hs", lambda h: F.pmod(h, F.lit(MERSENNE_P)))
-        ).alias("mhs"),
-    ).persist()
-    return _cache_put(_SIG_CACHE, key, sig, _SIG_CACHE_MAX)
+
+    def build() -> DataFrame:
+        reps, _ = _containment_reps(df, text_col, id_col)
+        mh = minhash_signature_udf(CONTAIN_A[:n_slots], CONTAIN_B[:n_slots])
+        return reps.select(
+            "doc",
+            F.size("hs").alias("n"),
+            mh(
+                F.transform("hs", lambda h: F.pmod(h, F.lit(MERSENNE_P)))
+            ).alias("mhs"),
+        ).persist()
+
+    return memo.cached(df, "containment_sig256", text_col, id_col, n_slots, build=build)
 
 
 def _inner_small_gate(
@@ -1142,7 +1143,7 @@ def containment_lsh(
     the exact operator (one corpus pass, memoized)."""
     reps, members = _containment_reps(df, text_col, id_col)
     # SHARED CANDIDATE RELATION ACROSS ARMS (optimization r14, VERDICT
-    # r13 next #2; the _LSH_PAIR_CACHE / _freq_sorted_docs pattern): the
+    # r13 next #2; the lsh_pairs / _freq_sorted_docs pattern): the
     # checkpointed candidate pair set is memoized per (corpus, threshold,
     # slice_base, max_miss) — deliberately NOT per prune_unique. The
     # df>=2 prune is EXACT (see prune_unique below: it only removes docs
@@ -1153,16 +1154,13 @@ def containment_lsh(
     # arm built the entry (pinned by test_containment_candidate_memo_*
     # and both arms sharing one oracle hash). Cold mode / cache clears
     # price the build; the verify + member expansion still run per call.
-    ckey = _dedup_cache_key(
-        df, "containment_cand", text_col, id_col, threshold, slice_base, max_miss
-    )
-    candidates = _cache_get(_CAND_CACHE, ckey)
-    if candidates is None:
-        candidates = _containment_candidates(
+    candidates = memo.cached(
+        df, "containment_cand", text_col, id_col, threshold, slice_base, max_miss,
+        build=lambda: _containment_candidates(
             df, reps, threshold, text_col, id_col, slice_base, max_miss,
             prune_unique,
-        )
-        candidates = _cand_cache_put(ckey, candidates)
+        ),
+    )
 
     sha = reps.select(F.col("doc").alias("doc_inner"), F.col("hs").alias("hs_a"))
     shb = reps.select(F.col("doc").alias("doc_outer"), F.col("hs").alias("hs_b"))
@@ -1228,7 +1226,7 @@ def _containment_candidates(
 ) -> DataFrame:
     """Build containment_lsh's checkpointed candidate pair set (band
     schemes + pair-free pruning + the exact deep arm) — the body
-    containment_lsh memoizes in _CAND_CACHE. Returns an eagerly
+    containment_lsh memoizes. Returns an eagerly
     localCheckpoint'ed (doc_inner, doc_outer) relation with every
     intermediate (prune frame, tok_df) already released."""
     import math as _math
@@ -1462,7 +1460,7 @@ def _containment_candidates(
     # results — an unpersisted localCheckpoint fails loudly
     # (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND), never recomputes.
     if prune_frame is not None:
-        _release_local_checkpoint(prune_frame)
+        memo.release_checkpoint(prune_frame)
     return candidates
 
 
@@ -1477,18 +1475,20 @@ def _dup_marked_positions(
     first-occurrence order is the scalar doc*2^20 + pos (LOUD failure
     past 2^20 tokens — see substring_dup_spans docstring).
 
-    Persisted and memoized in _SIG_CACHE (optimization r14, guide §5):
+    Persisted and memoized in the session memo (optimization r14, guide §5):
     the stats and clean operators run over the same corpus in one
     session, and the marking pass — the gram explode, the corpus-gram-
     scale min aggregate and the gram-keyed join back, the only corpus-
     token-scale shuffles either operator pays — is byte-identical
     between them. The memoized relation is marked-occurrence-sized
-    (duplicated grams only), far below corpus scale; released by
-    clear_dedup_caches() / bench cold mode like every other tag."""
-    key = _dedup_cache_key(df, "dup_marked", min_len, text_col, id_col)
-    hit = _cache_get(_SIG_CACHE, key)
-    if hit is not None:
-        return hit
+    (duplicated grams only), far below corpus scale."""
+    return memo.cached(
+        df, "dup_marked", min_len, text_col, id_col,
+        build=lambda: _dup_marked_build(df, min_len, text_col, id_col),
+    )
+
+
+def _dup_marked_build(df: DataFrame, min_len: int, text_col: str, id_col: str) -> DataFrame:
     grams = (
         # the token array binds to a COLUMN before the lambda uses it: an
         # expression inside a higher-order-function body is re-evaluated
@@ -1525,13 +1525,12 @@ def _dup_marked_positions(
         ).cast("long")
     )
     first = grams.groupBy("gram").agg(F.min(okey).alias("first_key"))
-    marked = (
+    return (
         grams.join(first, "gram")
         .where(okey != F.col("first_key"))
         .select("doc", "pos")
         .persist()
     )
-    return _cache_put(_SIG_CACHE, key, marked, _SIG_CACHE_MAX)
 
 
 def substring_dedup_clean(
@@ -1736,154 +1735,16 @@ def minhash_signature_udf(a_consts=None, b_consts=None):
     return sig
 
 
-#: Session-scoped memos, both keyed by (session id, analyzed-plan semantic
-#: hash, params):
-#:  - _SIG_CACHE: the corpus's persisted (id, shingles, minhash signature)
-#:    DataFrame — the expensive Arrow-UDF pass every MinHash consumer
-#:    (pair enumeration, query-by-doc search) starts from.
-#:  - _LSH_PAIR_CACHE: the verified near-dup pair set at a threshold —
-#:    triangles, clustering, and the canonical filter all consume it;
-#:    recomputing the shingle->signature->band->verify pipeline per caller
-#:    tripled their cost.
-#: MEMORY CONTRACT: entries pin executor storage (the signature cache is
-#: corpus-sized — shingle + signature arrays; the pair cache is small).
-#: Deliberate — an interactive/bench session hits the same corpus
-#: repeatedly — but BOUNDED: each cache is LRU-capped (below), evicting
-#: and unpersisting the least-recently-used entry when a session iterates
-#: over many corpora. (Measured failure the cap prevents: a full sf10
-#: suite accumulated several corpus-sized signature persists and drove a
-#: later memory-hungry operator into a JVM heap OOM.) clear_dedup_caches()
-#: still releases everything eagerly.
-_SIG_CACHE: dict = {}
-_LSH_PAIR_CACHE: dict = {}
-#: containment_lsh's checkpointed candidate pair set per (corpus,
-#: threshold, slice_base, max_miss) — shared by the pruned and unpruned
-#: arms (the prune is exact, so both verify to identical output from
-#: either candidate set; see containment_lsh). Entries are eager
-#: localCheckpoints: lineage-free. Eviction only drops the reference, so
-#: a result the caller holds stays readable; clear_dedup_caches RELEASES
-#: the blocks via _release_local_checkpoint, after which any stale plan
-#: that still references one fails LOUDLY (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
-#: instead of recomputing — never corrupts. Candidate-sized (pairs, two
-#: longs each), far below the signature relations the _SIG_CACHE holds.
-_CAND_CACHE: dict = {}
-#: max memoized entries: _SIG_CACHE entries are TAGGED per-corpus
-#: relations and one corpus now owns up to 7 tags (containment_sh,
-#: freqsorted_sh, containment_tagged, containment_sig256, signature
-#: projection, simhash_fp, dup_marked) — a cap of 4 LRU-churned persisted
-#: relations mid-suite, rebuilding the Arrow signature pass between the
-#: containment arms (ADVICE r13). 8 holds one corpus's working set; the
-#: cap still bounds a many-corpora session (the sf10 OOM the cap exists
-#: for came from unbounded CORPORA, not tags).
-_SIG_CACHE_MAX = int(os.environ.get("MOVER_SPARK_SIG_CACHE_MAX", "8"))
-_PAIR_CACHE_MAX = int(os.environ.get("MOVER_SPARK_PAIR_CACHE_MAX", "8"))
-_CAND_CACHE_MAX = int(os.environ.get("MOVER_SPARK_CAND_CACHE_MAX", "4"))
-
-
-def _cand_cache_put(key, df: DataFrame) -> DataFrame:
-    """_cache_put for checkpoint-backed entries. Eviction drops only the
-    memo's reference: a containment result the caller still holds reads
-    the checkpoint, so releasing its blocks here would kill that result
-    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). ContextCleaner frees the blocks
-    once no frame references them; clear_dedup_caches still releases."""
-    if _CAND_CACHE_MAX <= 0:
-        return df  # memoization off: caller's checkpoint lives until GC
-    while _CAND_CACHE and len(_CAND_CACHE) >= _CAND_CACHE_MAX:
-        _CAND_CACHE.pop(next(iter(_CAND_CACHE)))
-    _CAND_CACHE[key] = df
-    return df
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Drop a localCheckpoint'ed frame's storage blocks NOW instead of
-    waiting for driver GC + ContextCleaner. Only call when every consumer
-    of the frame has already materialized: an unpersisted localCheckpoint
-    cannot recompute (lineage is truncated) and any later read fails
-    loudly with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — which is the safety
-    property that makes this a release, not a cache hint. Best-effort:
-    a plan that is not a LogicalRDD (never checkpointed) is left alone."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass  # release is an optimization; never let it sink the query
-
-
-def _cache_get(cache: dict, key):
-    """LRU hit: move the entry to the most-recent end (dict order)."""
-    hit = cache.pop(key, None)
-    if hit is not None:
-        cache[key] = hit
-    return hit
-
-
-def _cache_put(cache: dict, key, df: DataFrame, cap: int) -> DataFrame:
-    """Insert, evicting (and unpersisting) least-recently-used entries
-    beyond `cap`. A dead session's entry can't be unpersisted — dropped
-    anyway. cap <= 0 means memoization is OFF: nothing is stored and the
-    caller's persist is released immediately (the plan stays usable, it
-    just recomputes)."""
-    if cap <= 0:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-        return df
-    while cache and len(cache) >= cap:
-        old = cache.pop(next(iter(cache)))
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # session already stopped — entry is garbage either way
-    cache[key] = df
-    return df
-
-
-def clear_dedup_caches() -> None:
-    """Unpersist and drop every memoized signature/pair set (e.g. after
-    the corpus changes in place, or to release executor storage). Entries
-    whose session has already been stopped can't be unpersisted — they are
-    dropped anyway, so a dead entry can never wedge the cache dirty."""
-    for cache in (_SIG_CACHE, _LSH_PAIR_CACHE):
-        for cached in cache.values():
-            try:
-                cached.unpersist()
-            except Exception:
-                pass  # session already stopped — entry is garbage either way
-        cache.clear()
-    for cached in _CAND_CACHE.values():
-        _release_local_checkpoint(cached)  # checkpoint blocks, not a cache
-    _CAND_CACHE.clear()
-
-
-def _dedup_cache_key(df: DataFrame, *params):
-    # semanticHash normalizes expression ids, so two reads of the same
-    # parquet path (equal analyzed plans) share one cache entry. The
-    # session component is the Spark applicationId — unlike id(session),
-    # it can't be recycled by the allocator after a stop()/getOrCreate()
-    # cycle, so a new session never resurrects a dead session's plans.
-    return (
-        df.sparkSession.sparkContext.applicationId,
-        df._jdf.queryExecution().analyzed().semanticHash(),
-        *params,
-    )
-
-
 def _hashed_shingles(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(doc, hs) — xxhash64'd shingle array per non-empty doc, persisted
-    and memoized in _SIG_CACHE under its own tag (cleared by
-    clear_dedup_caches). Shared by the exact containment operator and its
-    LSH-Ensemble twin, which also fixes the old per-invocation persist()
-    leak ADVICE flagged: one copy per corpus, however many calls."""
-    key = _dedup_cache_key(df, "containment_sh", text_col, id_col)
-    hit = _cache_get(_SIG_CACHE, key)
-    if hit is not None:
-        return hit
-    sh = _nonempty_hashed_shingles(df, text_col, id_col).persist()
-    return _cache_put(_SIG_CACHE, key, sh, _SIG_CACHE_MAX)
+    and memoized per corpus. Shared by the exact containment operator and
+    its LSH-Ensemble twin: one copy per corpus, however many calls."""
+    return memo.cached(
+        df, "containment_sh", text_col, id_col,
+        build=lambda: _nonempty_hashed_shingles(df, text_col, id_col).persist(),
+    )
 
 
 def _freq_sorted_docs(
@@ -1899,26 +1760,25 @@ def _freq_sorted_docs(
     aggregate — without the persist, ReusedExchange stops at the
     pre-aggregate exchange and the collect_list merge + per-doc
     sort_array runs once per branch."""
-    key = _dedup_cache_key(df, "freqsorted_sh", text_col, id_col)
-    hit = _cache_get(_SIG_CACHE, key)
-    if hit is not None:
-        return hit
-    tok = _hashed_shingles(df, text_col, id_col).select(
-        "doc", F.explode("hs").alias("tok")
-    )
-    freq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
-    docs = (
-        tok.join(freq, "tok")
-        .groupBy("doc")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("freq", "tok"))).alias(
-                "sorted_sh"
-            )
+
+    def build() -> DataFrame:
+        tok = _hashed_shingles(df, text_col, id_col).select(
+            "doc", F.explode("hs").alias("tok")
         )
-        .withColumn("n", F.size("sorted_sh"))
-        .persist()
-    )
-    return _cache_put(_SIG_CACHE, key, docs, _SIG_CACHE_MAX)
+        freq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
+        return (
+            tok.join(freq, "tok")
+            .groupBy("doc")
+            .agg(
+                F.sort_array(F.collect_list(F.struct("freq", "tok"))).alias(
+                    "sorted_sh"
+                )
+            )
+            .withColumn("n", F.size("sorted_sh"))
+            .persist()
+        )
+
+    return memo.cached(df, "freqsorted_sh", text_col, id_col, build=build)
 
 
 def signature_projection(
@@ -1930,10 +1790,12 @@ def signature_projection(
     via _signatures; the streaming near-dup probe applies it per
     micro-batch (a streaming DF can't persist). Any change here reaches
     both sides at once — a second copy of this chain drifting would make
-    stream and corpus band hashes silently never match."""
-    sh = df.select(
+    stream and corpus band hashes silently never match. The non-empty
+    filter runs on the text, before the shingle UDF (see
+    _nonempty_hashed_shingles)."""
+    sh = df.where(F.size(F.split(F.col(text_col), " ")) >= 2).select(
         F.col(id_col), shingles_udf()(F.col(text_col)).alias("sh")
-    ).where(F.size("sh") > 0)
+    )
     mh = minhash_signature_udf()
     return sh.select(
         id_col,
@@ -1947,14 +1809,11 @@ def signature_projection(
 def _signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """signature_projection, persisted and memoized per corpus plan (see
-    cache notes above)."""
-    key = _dedup_cache_key(df, text_col, id_col)
-    sig = _cache_get(_SIG_CACHE, key)
-    if sig is not None:
-        return sig
-    sig = signature_projection(df, text_col, id_col).persist()
-    return _cache_put(_SIG_CACHE, key, sig, _SIG_CACHE_MAX)
+    """signature_projection, persisted and memoized per corpus."""
+    return memo.cached(
+        df, "signatures", text_col, id_col,
+        build=lambda: signature_projection(df, text_col, id_col).persist(),
+    )
 
 
 def _band_bucket_rows(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1982,7 +1841,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    use_cache: bool = True,
 ) -> DataFrame:
     """Near-dup pairs via MinHash banding + exact-Jaccard verification.
 
@@ -1997,13 +1855,14 @@ def minhash_lsh_pairs(
     params) — downstream consumers (triangle counting, clustering, the
     canonical-keeper filter) share one enumeration instead of re-running
     the pipeline, and the signature pass is shared with similar_docs via
-    the signature memo. Pass ``use_cache=False`` for a non-persisted
-    one-shot pair plan (the signature memo still applies)."""
-    if use_cache:
-        key = _dedup_cache_key(df, threshold, text_col, id_col)
-        cached = _cache_get(_LSH_PAIR_CACHE, key)
-        if cached is not None:
-            return cached
+    the signature memo."""
+    return memo.cached(
+        df, "lsh_pairs", threshold, text_col, id_col,
+        build=lambda: _lsh_pairs(df, threshold, text_col, id_col).persist(),
+    )
+
+
+def _lsh_pairs(df: DataFrame, threshold: float, text_col: str, id_col: str) -> DataFrame:
     sig = _signatures(df, text_col, id_col)
     buckets = _band_bucket_rows(sig, id_col)
 
@@ -2018,17 +1877,13 @@ def minhash_lsh_pairs(
 
     sha = sig.select(F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
     shb = sig.select(F.col(id_col).alias("doc_b"), F.col("sh").alias("sh_b"))
-    pairs = (
+    return (
         candidates.join(sha, "doc_a")
         .join(shb, "doc_b")
         .withColumn("jaccard", F.round(jaccard_col(F.col("sh_a"), F.col("sh_b")), 6))
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    if not use_cache:
-        return pairs
-    pairs = pairs.persist()
-    return _cache_put(_LSH_PAIR_CACHE, key, pairs, _PAIR_CACHE_MAX)
 
 
 def dedup_against_base(
@@ -2348,18 +2203,17 @@ def simhash_pairs(
     band_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
     sim = simhash_udf()
-    # fingerprint projection memoized in the session registry (round-12
-    # persist audit): the per-invocation persist had no release owner
-    key = _dedup_cache_key(df, "simhash_fp", text_col, id_col)
-    sh = _cache_get(_SIG_CACHE, key)
-    if sh is None:
-        sh = df.select(
+    # fingerprint projection memoized per corpus (round-12 persist audit):
+    # the per-invocation persist had no release owner
+    sh = memo.cached(
+        df, "simhash_fp", text_col, id_col,
+        build=lambda: df.select(
             F.col(id_col),
             sim(F.transform(words_col(text_col), lambda x: md5_i64(x))).alias(
                 "simhash"
             ),
-        ).persist()
-        sh = _cache_put(_SIG_CACHE, key, sh, _SIG_CACHE_MAX)
+        ).persist(),
+    )
     bands = sh.select(
         id_col,
         "simhash",
@@ -2493,14 +2347,14 @@ def connected_components(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
             .unionAll(small.select("u", F.col("m").alias("v")))
             .distinct()
         )
-        _release_local_checkpoint(edges)
+        memo.release_checkpoint(edges)
         edges = nxt
         if obs.get["open"] == 0:
             return edges.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
     if n_edges > _CC_FINISH_EDGES:
         raise RuntimeError(f"connected components did not converge in {max_iter} rounds")
     tbl = edges.toArrow()
-    _release_local_checkpoint(edges)
+    memo.release_checkpoint(edges)
     nodes, roots = _min_labels(tbl.column("u").to_numpy(), tbl.column("v").to_numpy())
     node_type = edges.schema["u"].dataType
     return pairs.sparkSession.createDataFrame(
@@ -2768,8 +2622,7 @@ def similar_docs(
     exact Jaccard, so results match brute force whenever LSH recall is 1
     (P(miss) < 1e-5 at j >= threshold+0.1, same banding as the pair
     enumeration). Shares the persisted corpus signature memo with
-    minhash_lsh_pairs (see the cache notes near _SIG_CACHE — call
-    clear_dedup_caches() to release it)."""
+    minhash_lsh_pairs."""
     rows_per_band = N_MINHASH // LSH_BANDS
     sig = _signatures(df, text_col, id_col)
     band_cols = [

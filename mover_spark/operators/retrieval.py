@@ -41,60 +41,31 @@ per-list top-N members.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import _cache_get, _cache_put, _dedup_cache_key
+from .. import memo
 
 #: integer grain for order-invariant double sums (1e-6 of a BM25 point /
 #: 1e-9 of an RRF point — both far below the 6-decimal reported rounding)
 _BM25_GRAIN = 1_000_000
 _RRF_GRAIN = 1_000_000_000
 
-#: Session-scoped memo of the aggregated (doc_id, term, tf) relation per
-#: corpus — the same registry pattern as dedup._hashed_shingles, keyed by
-#: (applicationId, analyzed-plan semanticHash, cols). Four independent
-#: consumers derive from tf inside ONE bm25_topk call (postings, dl, df,
-#: corpus stats) and column pruning makes their subtrees canonically
-#: different, so without the persist the corpus tokenize+explode+aggregate
-#: ran FOUR times per query (no ReusedExchange — verified in the r14
-#: before-plan: 4 parquet scans of documents). hybrid_topk's lexical arm
-#: shares the same entry. LRU-bounded; clear_retrieval_caches() releases
-#: everything (bench cold mode calls it before every query).
-_TF_CACHE: dict = {}
-_TF_CACHE_MAX = int(os.environ.get("MOVER_SPARK_TF_CACHE_MAX", "2"))
-
-
-def clear_retrieval_caches() -> None:
-    """Unpersist and drop every memoized term-frequency relation (e.g.
-    after the corpus changes in place, or to release executor storage).
-    Entries whose session has already been stopped can't be unpersisted —
-    they are dropped anyway."""
-    for cached in _TF_CACHE.values():
-        try:
-            cached.unpersist()
-        except Exception:
-            pass  # session already stopped — entry is garbage either way
-    _TF_CACHE.clear()
-
 
 def _tf_relation(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, term, tf) — the corpus term-frequency aggregate, persisted
-    and memoized in _TF_CACHE (see its contract above)."""
-    key = _dedup_cache_key(docs, "bm25_tf", id_col, text_col)
-    hit = _cache_get(_TF_CACHE, key)
-    if hit is not None:
-        return hit
-    tf = (
-        _tokens(docs, id_col, text_col, "doc_id")
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
+    and memoized per corpus: bm25_topk's four tf consumers and
+    hybrid_topk's lexical arm share one entry."""
+    return memo.cached(
+        docs, "bm25_tf", id_col, text_col,
+        build=lambda: (
+            _tokens(docs, id_col, text_col, "doc_id")
+            .groupBy("doc_id", "term")
+            .agg(F.count(F.lit(1)).alias("tf"))
+            .persist()
+        ),
     )
-    return _cache_put(_TF_CACHE, key, tf, _TF_CACHE_MAX)
 
 
 def _tokens(df: DataFrame, id_col: str, text_col: str, out_id: str) -> DataFrame:
@@ -133,9 +104,8 @@ def bm25_topk(
     no rows.
 
     Lifecycle note: the corpus (doc_id, term, tf) aggregate is persisted
-    into the session-scoped _TF_CACHE as a side effect (LRU-bounded; one
-    entry per corpus). Call clear_retrieval_caches() after mutating the
-    corpus in place or to release executor storage early.
+    into the session memo (mover_spark.memo) as a side effect, one entry
+    per corpus; a corpus rewritten in place and read again misses it.
     """
     # memoized persisted tf (optimization r14, guide §2.4/§5): four
     # consumers below (postings, dl, dfc, stats) prune different columns,

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import memo
 from .dedup import qcosine, quantized_vec
 
 EMB_DIM = 64
@@ -1016,26 +1017,6 @@ def read_ann_index(spark, path: str):
     return spark.read.parquet(f"{path}/codes"), cents, cb, meta
 
 
-#: Session registry of loaded ANN indexes keyed by (session, path) — the
-#: production probe-server shape (pq_topk_from_loaded's docstring:
-#: per-call re-reads cost meta/centroids/codebooks collect jobs plus
-#: directory listings + footer reads across hundreds of cell directories,
-#: measured dominant on a 435-cell index). Entries hold the LAZY loaded
-#: tuple — the codes relation is NOT persisted: a persist() here was
-#: measured to (a) replace the cell-partitioned parquet scan with an
-#: InMemoryRelation scan, losing PartitionFilters cell pruning — the
-#: index's whole scale story — and (b) leave a CacheManager entry that
-#: substitutes STALE data into fresh spark.read.parquet reads of the same
-#: path after compact_ann_index's out-of-band rename swap (Spark only
-#: refreshes path caches on its own writes). Entries are invalidated by
-#: an mtime signature over the index's artifact directories, so appends/
-#: compactions/rebuilds re-read; LRU-bounded like dedup._SIG_CACHE;
-#: released by clear_similarity_caches (bench cold mode calls it per
-#: query).
-_ANN_LOADED_CACHE: dict = {}
-_ANN_LOADED_CACHE_MAX = int(os.environ.get("MOVER_SPARK_ANN_CACHE_MAX", "4"))
-
-
 def _ann_index_stamp(path: str):
     """Cheap change signature of a persisted index: names + mtimes of the
     top-level entries of the index dir and each artifact dir (meta /
@@ -1062,34 +1043,27 @@ def _ann_index_stamp(path: str):
 
 
 def loaded_ann_index(spark, path: str):
-    """read_ann_index memoized per session — repeated queries against the
-    same persisted index skip the per-call meta/centroids/codebooks
-    collect jobs and the codes directory re-listing (the memoized codes
-    DataFrame carries its InMemoryFileIndex). The codes relation stays
-    LAZY and unpersisted so per-query-cell probes keep their
-    PartitionFilters pruning (see the registry comment). Raises exactly
-    like read_ann_index on version/scale mismatch (misses delegate to
-    it). Callers MAY persist/unpersist the codes relation around a
-    bounded drain (the streaming probe does); they must release it before
-    any index mutation."""
-    key = (id(spark), os.path.normpath(path))
-    stamp = _ann_index_stamp(path)
-    hit = _ANN_LOADED_CACHE.get(key)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]
-    _ANN_LOADED_CACHE.pop(key, None)
-    loaded = read_ann_index(spark, path)
-    while len(_ANN_LOADED_CACHE) >= _ANN_LOADED_CACHE_MAX:
-        _ANN_LOADED_CACHE.pop(next(iter(_ANN_LOADED_CACHE)))
-    _ANN_LOADED_CACHE[key] = (stamp, loaded)
-    return loaded
-
-
-def clear_similarity_caches() -> None:
-    """Drop every memoized loaded index (bench cold mode / tests). Entries
-    are lazy (never persisted by the registry), so dropping the references
-    is the whole release."""
-    _ANN_LOADED_CACHE.clear()
+    """read_ann_index memoized per (session, path) and stamped with
+    _ann_index_stamp, so an append, compaction or rebuild re-reads it —
+    the production probe-server shape: per-call re-reads cost the
+    meta/centroids/codebooks collect jobs plus directory listings and
+    footer reads across hundreds of cell directories (measured dominant
+    on a 435-cell index). The memoized codes DataFrame carries its
+    InMemoryFileIndex and stays LAZY and unpersisted: a persist here
+    replaced the cell-partitioned parquet scan with an InMemoryRelation
+    scan, losing the PartitionFilters cell pruning that is the index's
+    whole scale story, and left a CacheManager entry that substituted
+    STALE data into fresh reads of the path after compact_ann_index's
+    out-of-band rename swap. Raises exactly like read_ann_index on
+    version/scale mismatch (misses delegate to it). Callers MAY
+    persist/unpersist the codes relation around a bounded drain (the
+    streaming probe does); they must release it before any index
+    mutation."""
+    return memo.cached(
+        spark, "ann_index", os.path.normpath(path),
+        build=lambda: read_ann_index(spark, path),
+        stamp=_ann_index_stamp(path),
+    )
 
 
 def pq_topk_from_index(
@@ -1666,47 +1640,60 @@ def semantic_dedup(
         # Validated before any Spark job so a misconfigured call fails fast.
         raise ValueError(f"semantic_dedup threshold must be <= 1.0, got {threshold}")
     c = corpus.select(F.col(id_col).alias("vid"), quantized_vec(vec_col).alias("qv"))
-    if centroids is not None:
-        # explicit centroids carry their own cell count — no auto-sizing job
-        cents = [(cid, [x * 1000.0 for x in v]) for cid, v in centroids]
-    else:
-        if n_cells is None:
-            n_cells, _ = auto_ivf_params(corpus.count())
-        cents = [(r.vid, r.qv) for r in c.orderBy("vid").limit(n_cells).collect()]
     base = c.withColumn(
         "norm", F.sqrt(qdot(F.col("qv"), F.col("qv")).cast("double"))
     ).where(F.col("norm") > 0)
-    if not cents:
+
+    def assign() -> tuple:
+        if centroids is not None:
+            # explicit centroids carry their own cell count — no auto-sizing job
+            cents = [(cid, [x * 1000.0 for x in v]) for cid, v in centroids]
+        else:
+            k = n_cells if n_cells is not None else auto_ivf_params(corpus.count())[0]
+            cents = [(r.vid, r.qv) for r in c.orderBy("vid").limit(k).collect()]
+        if not cents:
+            return None, cents
+        # EXACT-DUPLICATE COLLAPSE (the dup-mass lever containment_lsh uses):
+        # identical quantized vectors have cosine exactly 1.0 after the 6-dp
+        # round, so for any threshold <= 1 every member of a distinct-qv group
+        # lands in its representative's component unconditionally. Pair + CC
+        # work therefore runs over ONE min-id representative per distinct qv
+        # and membership re-expands afterwards — output-identical by
+        # construction, and on dup-heavy corpora it removes the quadratic
+        # in-clump pair mass (sf100 fixture: 2M vectors -> ~14k reps; the
+        # uncollapsed pair stage was ~1e9 rows and took >30 min).
+        reps = base.groupBy("qv").agg(
+            F.min("vid").alias("vid"), F.first("norm").alias("norm")
+        )
+        # materialize the assignment ONCE for EVERY arm (optimization r14;
+        # the budget arm has done this since r12 for its per-level scans —
+        # its measured 419-vs-128 s recompute gap, noted below): without it
+        # the default arm's THREE downstream consumers (the per-cell size
+        # agg, the tile builder, and the final rep_out join) plus the member
+        # map each re-executed the corpus scan + quantize + reps groupBy (a
+        # wide shuffle keyed on the 64-dim array) + the cell-assignment
+        # Arrow UDF. The checkpoint is reps-sized (one row per distinct
+        # quantized vector).
+        assigned = reps.withColumn(
+            "cell", _ranked_cells_udf(cents)(F.col("qv"))[0]
+        ).localCheckpoint(eager=True)
+        return assigned, cents
+
+    # the assignment and its centroids are memoized per (corpus, quantizer):
+    # the session memo owns the checkpoint, a repeat call reads it, and
+    # memo.clear() releases its blocks
+    assigned, cents = memo.cached(
+        corpus, "semantic_assigned", vec_col, id_col, n_cells,
+        None if centroids is None else tuple((cid, tuple(v)) for cid, v in centroids),
+        build=assign,
+    )
+    if assigned is None:
         return base.select(
             F.col("vid").alias(id_col),
             F.lit(None).cast("long").alias("cell"),
             F.col("vid").alias("cluster_id"),
             F.lit(True).alias("is_kept"),
         )
-    # EXACT-DUPLICATE COLLAPSE (the dup-mass lever containment_lsh uses):
-    # identical quantized vectors have cosine exactly 1.0 after the 6-dp
-    # round, so for any threshold <= 1 every member of a distinct-qv group
-    # lands in its representative's component unconditionally. Pair + CC
-    # work therefore runs over ONE min-id representative per distinct qv
-    # and membership re-expands afterwards — output-identical by
-    # construction, and on dup-heavy corpora it removes the quadratic
-    # in-clump pair mass (sf100 fixture: 2M vectors -> ~14k reps; the
-    # uncollapsed pair stage was ~1e9 rows and took >30 min).
-    reps = base.groupBy("qv").agg(
-        F.min("vid").alias("vid"), F.first("norm").alias("norm")
-    )
-    # materialize the assignment ONCE for EVERY arm (optimization r14;
-    # the budget arm has done this since r12 for its per-level scans —
-    # its measured 419-vs-128 s recompute gap, noted below): without it
-    # the default arm's THREE downstream consumers (the per-cell size
-    # agg, the tile builder, and the final rep_out join) plus the member
-    # map each re-executed the corpus scan + quantize + reps groupBy (a
-    # wide shuffle keyed on the 64-dim array) + the cell-assignment
-    # Arrow UDF. The checkpoint is reps-sized (one row per distinct
-    # quantized vector).
-    assigned = reps.withColumn(
-        "cell", _ranked_cells_udf(cents)(F.col("qv"))[0]
-    ).localCheckpoint(eager=True)
     # members rides the checkpointed relation too (assigned carries
     # exactly reps' rows, plus cell): the rep side of the qv join no
     # longer re-runs the groupBy. Built from the PRE-subdivision frame —

@@ -9,11 +9,11 @@ in ANSI-ish SQL so the DuckDB oracle checks values exactly.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .. import memo
 
 #: public stopword markers per language (tiny on purpose: the classifier is
 #: a deterministic n-gram/stopword heuristic, not a model)
@@ -32,43 +32,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 #: identically in Java regex (Spark) and RE2 (DuckDB oracle).
 PUNCT_RE = r"[\p{L}\p{N} ]"
 TOKEN_RE = r"\w+|[^\w\s]"
-
-#: memoized persisted aggregate tables (unigram_xent's term counts,
-#: source_drift_kl's per-source counts), keyed like dedup's _SIG_CACHE by
-#: (applicationId, corpus plan semantic hash, op params) — ONE persisted
-#: copy per corpus per op, however many times the op is called, instead of
-#: the per-invocation persist()s that leaked executor storage until LRU
-#: eviction. Same memory contract as dedup: long-lived services iterating
-#: over many corpora call clear_text_caches() between corpora.
-_TEXT_CACHE: dict = {}
-
-
-#: count tables are aggregate-sized (vocab rows, not corpus rows) so the
-#: cap is looser than dedup's corpus-sized signature cache
-_TEXT_CACHE_MAX = int(os.environ.get("MOVER_SPARK_TEXT_CACHE_MAX", "8"))
-
-
-def _memo_persist(tag: tuple, df: DataFrame, build) -> DataFrame:
-    from .dedup import _cache_get, _cache_put, _dedup_cache_key
-
-    key = _dedup_cache_key(df, *tag)
-    hit = _cache_get(_TEXT_CACHE, key)
-    if hit is not None:
-        return hit
-    return _cache_put(_TEXT_CACHE, key, build().persist(), _TEXT_CACHE_MAX)
-
-
-def clear_text_caches() -> None:
-    """Unpersist and drop every memoized count table (mirror of
-    dedup.clear_dedup_caches — dead-session entries are dropped even when
-    unpersist throws)."""
-    for cached in _TEXT_CACHE.values():
-        try:
-            cached.unpersist()
-        except Exception:
-            pass
-    _TEXT_CACHE.clear()
-
 
 def _words(text: Column | str = "text") -> Column:
     c = F.col(text) if isinstance(text, str) else text
@@ -454,11 +417,10 @@ def _winnow_fps_arrays(
     arrives in >= slots splits, making this a no-op exactly where the
     shuffle would be expensive).
 
-    Persisted + memoized per (corpus, k, w, hash) in the text registry
-    (optimization r14, guide §5): winnowing_profile and winnowing_overlap
-    consume the identical fingerprint relation in one session, and the
-    per-character gram-hash pass is the whole cost of the family —
-    released by clear_text_caches() / bench cold mode."""
+    Persisted + memoized per (corpus, k, w, hash) (optimization r14,
+    guide §5): winnowing_profile and winnowing_overlap consume the
+    identical fingerprint relation in one session, and the per-character
+    gram-hash pass is the whole cost of the family."""
 
     def build() -> DataFrame:
         d = df
@@ -508,11 +470,10 @@ def _winnow_fps_arrays(
                     )
                 ).alias("__fps"),
             )
+            .persist()
         )
 
-    return _memo_persist(
-        ("winnow_fps", k, w, text_col, id_col, hash_fn), df, build
-    )
+    return memo.cached(df, "winnow_fps", k, w, text_col, id_col, hash_fn, build=build)
 
 
 def winnowing_profile(
@@ -827,13 +788,11 @@ def unigram_xent(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     ).where(F.col("term") != "")
     # persist the vocab-sized count table: N is then SUM(c) over it — one
     # corpus explode builds the whole LM instead of a second full scan
-    # just to count tokens. Memoized per corpus plan (_memo_persist): a
-    # long session calling this per-corpus holds ONE persisted copy each,
-    # not one per invocation — clear_text_caches() releases them.
-    cnt = _memo_persist(
-        ("xent_cnt", text_col, id_col),
-        df,
-        lambda: tok.groupBy("term").agg(F.count(F.lit(1)).alias("c")),
+    # just to count tokens. Memoized per corpus: a long session calling
+    # this per-corpus holds ONE persisted copy each, not one per invocation.
+    cnt = memo.cached(
+        df, "xent_cnt", text_col, id_col,
+        build=lambda: tok.groupBy("term").agg(F.count(F.lit(1)).alias("c")).persist(),
     )
     n_total = cnt.agg(F.sum("c").alias("n_corpus"))
     lp = cnt.crossJoin(F.broadcast(n_total)).select(
@@ -880,11 +839,10 @@ def source_drift_kl(
         F.col(group_col).alias("grp"),
         F.explode(F.split(F.col(text_col), " ")).alias("term"),
     ).where(F.col("term") != "")
-    # memoized persist per corpus plan — see unigram_xent / clear_text_caches
-    cst = _memo_persist(
-        ("drift_cst", group_col, text_col),
-        df,
-        lambda: tok.groupBy("grp", "term").agg(F.count(F.lit(1)).alias("c_st")),
+    # memoized persist per corpus — see unigram_xent
+    cst = memo.cached(
+        df, "drift_cst", group_col, text_col,
+        build=lambda: tok.groupBy("grp", "term").agg(F.count(F.lit(1)).alias("c_st")).persist(),
     )
     ct = cst.groupBy("term").agg(F.sum("c_st").alias("c_t"))
     ns = cst.groupBy("grp").agg(F.sum("c_st").alias("n_s"))
@@ -940,10 +898,8 @@ def doc_novelty(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     either wrong answer.
 
     Lifecycle note: the corpus shingle projection is persisted into the
-    dedup family's session-scoped _SIG_CACHE as a side effect (one entry
-    per corpus, LRU-bounded). Call
-    mover_spark.operators.dedup.clear_dedup_caches() after mutating the
-    corpus in place or to release executor storage early."""
+    session memo (mover_spark.memo) as a side effect, one entry per
+    corpus."""
     from .dedup import _hashed_shingles
 
     sh = (

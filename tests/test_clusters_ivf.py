@@ -4,6 +4,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from mover_spark import memo
 from mover_spark.operators import dedup
 from mover_spark.operators.dedup import connected_components, dedup_clusters
 from mover_spark.operators.similarity import brute_force_topk, ivf_topk
@@ -691,7 +692,6 @@ def test_loaded_ann_index_memo_hit_and_mtime_invalidation(spark, catalog, tmp_pa
     memo so queries see the mutated index."""
     from mover_spark.operators.similarity import (
         append_to_ann_index,
-        clear_similarity_caches,
         loaded_ann_index,
         write_ann_index,
     )
@@ -714,4 +714,4 @@ def test_loaded_ann_index_memo_hit_and_mtime_invalidation(spark, catalog, tmp_pa
         n_after = mutated[0].count()
         assert n_after > n_before, "reloaded codes must include the appended rows"
     finally:
-        clear_similarity_caches()
+        memo.clear()

@@ -2,6 +2,7 @@
 
 from pyspark.sql import functions as F
 
+from mover_spark import memo
 from mover_spark.operators.dedup import (
     embedding_cosine_pairs,
     exact_dedup,
@@ -105,10 +106,10 @@ def test_lsh_pipeline_memoization(spark):
     """Pair enumeration is memoized per (corpus plan, params): the same
     corpus + threshold returns the SAME persisted DataFrame (triangles /
     clustering / canonical-filter share one pipeline); different params
-    miss; clear_dedup_caches unpersists and empties both memos."""
+    miss; memo.clear() unpersists and empties both memos."""
     from mover_spark.operators import dedup as D
 
-    D.clear_dedup_caches()
+    memo.clear()
     docs = spark.createDataFrame(
         [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumps"),
          (3, "something else entirely here")],
@@ -119,11 +120,11 @@ def test_lsh_pipeline_memoization(spark):
     assert p1 is p2  # memo hit
     assert D.minhash_lsh_pairs(docs, threshold=0.5) is not p1  # param miss
     assert p1.storageLevel.useMemory  # persisted
-    assert len(D._SIG_CACHE) == 1  # one corpus -> one signature entry
+    assert len(memo.entries("signatures")) == 1  # one corpus -> one signature entry
     assert [(r.doc_a, r.doc_b) for r in p1.collect()] == [(1, 2)]
 
-    D.clear_dedup_caches()
-    assert not D._LSH_PAIR_CACHE and not D._SIG_CACHE
+    memo.clear()
+    assert not memo.entries("lsh_pairs") and not memo.entries("signatures")
     assert not p1.storageLevel.useMemory  # released
 
 
@@ -193,9 +194,7 @@ def test_dedup_against_base_exact_near_and_exemptions(spark):
 
     # a second increment against the SAME base plan reuses the memoized
     # base signatures (no new cache entry for the base side)
-    from mover_spark.operators.dedup import _SIG_CACHE
-
-    n_entries = len(_SIG_CACHE)
+    n_entries = len(memo.entries("signatures"))
     new2 = spark.createDataFrame(
         [(7, "another brand new increment document arrives")],
         "doc_id long, text string",
@@ -203,7 +202,7 @@ def test_dedup_against_base_exact_near_and_exemptions(spark):
     kept2 = {r.doc_id for r in dedup_against_base(new2, base).collect()}
     assert kept2 == {7}
     # one NEW entry (new2's signatures); the base entry was reused
-    assert len(_SIG_CACHE) == n_entries + 1
+    assert len(memo.entries("signatures")) == n_entries + 1
 
 
 def test_containment_pairs_asymmetric_and_lossless(spark, catalog):
@@ -489,7 +488,6 @@ def test_containment_lsh_deep_planted_containers(spark, catalog):
     Jaccard floor ~0.118 needs 378 r=2 bands = background all-pairs) and
     must come through the exact prefix-filter deep arm."""
     from mover_spark.operators.dedup import (
-        clear_dedup_caches,
         containment_lsh,
         containment_pairs,
     )
@@ -515,7 +513,7 @@ def test_containment_lsh_deep_planted_containers(spark, catalog):
     }
     assert (1, 2, 1.0) in exact and (1, 3, 1.0) in exact, exact
     assert lsh == exact
-    clear_dedup_caches()
+    memo.clear()
 
 
 def test_containment_lsh_dup_mass_collapse(spark, catalog):
@@ -527,7 +525,6 @@ def test_containment_lsh_dup_mass_collapse(spark, catalog):
     operator."""
     from mover_spark.operators.dedup import (
         _containment_reps,
-        clear_dedup_caches,
         containment_lsh,
         containment_pairs,
     )
@@ -552,7 +549,7 @@ def test_containment_lsh_dup_mass_collapse(spark, catalog):
     # 12*11 intra-cluster ordered pairs + 12 quote-in-container pairs
     assert len(exact) == 12 * 11 + 12
     assert lsh == exact
-    clear_dedup_caches()
+    memo.clear()
 
 
 def test_containment_scheme_builder_contract(spark):
@@ -597,31 +594,36 @@ def test_containment_scheme_builder_contract(spark):
 
 
 def test_sig_cache_lru_bounded_and_unpersists(spark, catalog, monkeypatch):
-    """The signature memo must stay bounded: beyond the cap the
+    """The signature memo must stay bounded: beyond the budget the
     least-recently-used corpus entry is evicted AND unpersisted (a full
     sf10 suite once accumulated enough corpus-sized persists to OOM a
     later operator). LRU order: a re-hit protects an entry from the next
     eviction."""
     from mover_spark.operators import dedup as dd
 
-    dd.clear_dedup_caches()
-    monkeypatch.setattr(dd, "_SIG_CACHE_MAX", 2)
+    memo.clear()
     docs = catalog.df("documents")
     c1 = docs.where(F.col("doc_id") % 3 == 0)
     c2 = docs.where(F.col("doc_id") % 3 == 1)
     c3 = docs.where(F.col("doc_id") % 3 == 2)
     s1 = dd._signatures(c1)
+    s1.count()
     s2 = dd._signatures(c2)
-    assert len(dd._SIG_CACHE) == 2
+    s2.count()
+    assert len(memo.entries("signatures")) == 2
+    # a budget one byte short of the two materialized entries
+    held = memo.stats()["resident_bytes"]
+    assert held > 0
+    monkeypatch.setattr(memo, "_budget_bytes", lambda sc: held - 1)
     assert dd._signatures(c1) is s1  # hit refreshes recency
     dd._signatures(c3)               # evicts c2 (now least recent), not c1
-    assert len(dd._SIG_CACHE) == 2
+    assert len(memo.entries("signatures")) == 2
     assert dd._signatures(c1) is s1
     assert not s2.storageLevel.useMemory and not s2.storageLevel.useDisk, (
         "evicted entry must be unpersisted"
     )
     assert dd._signatures(c2) is not s2  # evicted -> rebuilt on demand
-    dd.clear_dedup_caches()
+    memo.clear()
 
 
 def test_signature_index_append_matches_full_rebuild(spark, catalog, tmp_path):
@@ -654,21 +656,6 @@ def test_signature_index_append_matches_full_rebuild(spark, catalog, tmp_path):
     assert via_append, "day-2 increment should have survivors"
     meta = spark.read.parquet(f"{appended}/meta").collect()[0]
     assert meta.n_docs == base.count() + day1.count()
-
-
-def test_sig_cache_cap_zero_disables_memoization(spark, catalog, monkeypatch):
-    """Cap 0 = memoization OFF: nothing stored, no StopIteration, and the
-    returned plan is usable (recomputes instead of pinning storage)."""
-    from mover_spark.operators import dedup as dd
-
-    dd.clear_dedup_caches()
-    monkeypatch.setattr(dd, "_SIG_CACHE_MAX", 0)
-    docs = catalog.df("documents").limit(20)
-    sig = dd._signatures(docs)
-    assert sig.count() > 0
-    assert len(dd._SIG_CACHE) == 0
-    assert not sig.storageLevel.useMemory and not sig.storageLevel.useDisk
-    dd.clear_dedup_caches()
 
 
 def test_compact_signature_index_drops_reappended_duplicates(spark, catalog, tmp_path):
@@ -781,7 +768,6 @@ def test_containment_lsh_prune_unique_is_exact(spark, catalog):
     boundary pair whose inner doc has shared_n == ceil(t*n) exactly —
     one fewer shared shingle and the pair itself would be sub-threshold."""
     from mover_spark.operators.dedup import (
-        clear_dedup_caches,
         containment_lsh,
         containment_pairs,
     )
@@ -810,14 +796,14 @@ def test_containment_lsh_prune_unique_is_exact(spark, catalog):
         (r.doc_inner, r.doc_outer, r.containment)
         for r in containment_lsh(df, 0.95).collect()
     }
-    clear_dedup_caches()
+    memo.clear()
     pruned = {
         (r.doc_inner, r.doc_outer, r.containment)
         for r in containment_lsh(df, 0.95, prune_unique=True).collect()
     }
     assert plain == exact
     assert pruned == exact
-    clear_dedup_caches()
+    memo.clear()
 
 
 def test_containment_lsh_prune_unique_keeps_dup_mass(spark):
@@ -825,7 +811,7 @@ def test_containment_lsh_prune_unique_keeps_dup_mass(spark):
     pruning must leave intra-cluster pairs intact even when the cluster's
     shingles are unique corpus-wide (rep-level df is 1: the identical
     copies collapse to ONE rep before df counting)."""
-    from mover_spark.operators.dedup import clear_dedup_caches, containment_lsh
+    from mover_spark.operators.dedup import containment_lsh
 
     dups = [(10 + i, "solo unique content never shared elsewhere") for i in range(4)]
     other = [(50, " ".join(f"z{j}" for j in range(12)))]
@@ -836,7 +822,7 @@ def test_containment_lsh_prune_unique_keeps_dup_mass(spark):
     }
     assert len(got) == 12  # 4*3 ordered intra pairs
     assert all(v == 1.0 for v in got.values())
-    clear_dedup_caches()
+    memo.clear()
 
 
 def test_containment_prune_owns_tok_df_lifecycle(spark, monkeypatch):
@@ -844,11 +830,11 @@ def test_containment_prune_owns_tok_df_lifecycle(spark, monkeypatch):
     vocabulary-sized tok_df whose only handle is inside containment_lsh —
     it must be released by the call itself, not left to ContextCleaner GC.
     Every frame persisted during the call must either be owned by the
-    session cache registry (released by clear_dedup_caches) or already
+    session memo (released by memo.clear()) or already
     unpersisted when the call returns."""
     from mover_spark.operators import dedup as D
 
-    D.clear_dedup_caches()
+    memo.clear()
     persisted = []
     # patch the CONCRETE runtime class (pyspark 4's classic DataFrame
     # subclass overrides persist, so patching pyspark.sql.DataFrame's
@@ -878,7 +864,7 @@ def test_containment_prune_owns_tok_df_lifecycle(spark, monkeypatch):
     }
     assert (1, 2) in got
     assert persisted, "expected the prune pass to persist tok_df"
-    D.clear_dedup_caches()
+    memo.clear()
     leaked = [
         p for p in persisted
         if p.storageLevel.useMemory or p.storageLevel.useDisk
@@ -895,7 +881,7 @@ def test_containment_prune_release_after_candidates_materialized(spark, monkeypa
     pass (__shared), and tok_df storage is released by return time."""
     from mover_spark.operators import dedup as D
 
-    D.clear_dedup_caches()
+    memo.clear()
     persisted = []
     df_cls = type(spark.range(1))
     orig_persist = df_cls.persist
@@ -923,7 +909,7 @@ def test_containment_prune_release_after_candidates_materialized(spark, monkeypa
         "candidate checkpoint did not sever it"
     )
     out.collect()  # the verify action must succeed post-release
-    D.clear_dedup_caches()
+    memo.clear()
     leaked = [
         p for p in persisted
         if p.storageLevel.useMemory or p.storageLevel.useDisk
@@ -941,7 +927,7 @@ def test_containment_releases_intermediate_checkpoints(spark):
     behind is the candidates checkpoint the returned plan still reads."""
     from mover_spark.operators import dedup as D
 
-    D.clear_dedup_caches()
+    memo.clear()
     docs = [(i, " ".join(f"w{j}" for j in range(20 + (i % 3)))) for i in range(30)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     # call 1 warms the session signature registry (its persists are
@@ -963,7 +949,7 @@ def test_containment_releases_intermediate_checkpoints(spark):
         "checkpoints were not released"
     )
     out.collect()  # the surviving checkpoint still serves the plan
-    D.clear_dedup_caches()
+    memo.clear()
 
 
 def test_containment_cold_build_one_checkpoint_per_stage(spark, monkeypatch):
@@ -973,7 +959,7 @@ def test_containment_cold_build_one_checkpoint_per_stage(spark, monkeypatch):
     observation on the prune checkpoint rather than a driver collect."""
     from mover_spark.operators import dedup as D
 
-    D.clear_dedup_caches()
+    memo.clear()
     a_text = " ".join(f"w{i}" for i in range(21))
     b_text = " ".join(f"w{i}" for i in range(20)) + " " + " ".join(
         f"b{i}" for i in range(10)
@@ -1008,7 +994,7 @@ def test_containment_cold_build_one_checkpoint_per_stage(spark, monkeypatch):
     assert not collects, f"{len(collects)} driver collect(s) before the result"
     monkeypatch.undo()
     assert (1, 2) in {(r.doc_inner, r.doc_outer) for r in out.collect()}
-    D.clear_dedup_caches()
+    memo.clear()
 
 
 def test_containment_band_keys_contract(spark):
@@ -1078,7 +1064,7 @@ def test_freq_sorted_docs_shared_and_memoized(spark):
     cold-cache recomputation exactly."""
     from mover_spark.operators import dedup as D
 
-    D.clear_dedup_caches()
+    memo.clear()
     docs = [
         (1, "a b c d e f g h"),
         (2, "a b c d e f g x"),
@@ -1090,9 +1076,9 @@ def test_freq_sorted_docs_shared_and_memoized(spark):
     jac_cold = sorted(map(tuple, D.ngram_jaccard_pairs(df, 0.6).collect()))
     con_cold = sorted(map(tuple, D.containment_pairs(df, 0.6).collect()))
     # both operators produced/consumed the SAME memo entry
-    fs_keys = [k for k in D._SIG_CACHE if "freqsorted_sh" in str(k)]
-    assert len(fs_keys) == 1, f"expected one shared memo entry, got {fs_keys}"
-    relation = D._SIG_CACHE[fs_keys[0]]
+    fs_entries = memo.entries("freqsorted_sh")
+    assert len(fs_entries) == 1, f"expected one shared memo entry, got {fs_entries}"
+    relation = fs_entries[0]
     assert relation.storageLevel.useMemory or relation.storageLevel.useDisk
     assert D._freq_sorted_docs(df) is relation  # hit, not a rebuild
     # memoized warm pass returns identical rows
@@ -1101,8 +1087,8 @@ def test_freq_sorted_docs_shared_and_memoized(spark):
     assert jac_warm == jac_cold and con_warm == con_cold
     assert jac_cold, "fixture must produce at least one jaccard pair"
     assert con_cold, "fixture must produce at least one containment pair"
-    D.clear_dedup_caches()
-    assert not any("freqsorted_sh" in str(k) for k in D._SIG_CACHE)
+    memo.clear()
+    assert not memo.entries("freqsorted_sh")
 
 
 def test_conf_bytes_parser():
@@ -1171,7 +1157,7 @@ def test_containment_candidate_memo_shared_across_arms(spark):
     exactly its own cold-cache rows."""
     from mover_spark.operators import dedup as D
 
-    D.clear_dedup_caches()
+    memo.clear()
     # a true pair (A contained in B at 0.95) + unique-noise docs so the
     # prune actually fires and the two arms' own candidate sets differ
     a_text = " ".join(f"w{i}" for i in range(21))
@@ -1189,22 +1175,22 @@ def test_containment_candidate_memo_shared_across_arms(spark):
     cold_pruned = sorted(
         map(tuple, D.containment_lsh(df, 0.9, prune_unique=True).collect())
     )
-    assert len(D._CAND_CACHE) == 1, D._CAND_CACHE
-    entry = next(iter(D._CAND_CACHE.values()))
+    assert len(memo.entries("containment_cand")) == 1, memo.entries("containment_cand")
+    entry = memo.entries("containment_cand")[0]
     # the unpruned arm hits the pruned arm's entry (same key, no rebuild)
     warm_plain = sorted(
         map(tuple, D.containment_lsh(df, 0.9, prune_unique=False).collect())
     )
-    assert len(D._CAND_CACHE) == 1
-    assert next(iter(D._CAND_CACHE.values())) is entry
-    D.clear_dedup_caches()
-    assert not D._CAND_CACHE
+    assert len(memo.entries("containment_cand")) == 1
+    assert memo.entries("containment_cand")[0] is entry
+    memo.clear()
+    assert not memo.entries("containment_cand")
     cold_plain = sorted(
         map(tuple, D.containment_lsh(df, 0.9, prune_unique=False).collect())
     )
     assert cold_plain, "fixture must produce containment pairs"
     assert warm_plain == cold_plain == cold_pruned
-    D.clear_dedup_caches()
+    memo.clear()
 
 
 
@@ -1215,8 +1201,9 @@ def test_containment_result_survives_candidate_eviction(spark, monkeypatch):
     result reads."""
     from mover_spark.operators import dedup as D
 
-    D.clear_dedup_caches()
-    monkeypatch.setattr(D, "_CAND_CACHE_MAX", 1)
+    memo.clear()
+    # a budget of one byte: every put evicts every other entry that holds blocks
+    monkeypatch.setattr(memo, "_budget_bytes", lambda sc: 1)
 
     def corpus(tag):
         a = " ".join(f"{tag}{i}" for i in range(21))
@@ -1229,9 +1216,9 @@ def test_containment_result_survives_candidate_eviction(spark, monkeypatch):
     rows = sorted(map(tuple, first.collect()))
     assert rows, "fixture must produce containment pairs"
     D.containment_lsh(corpus("q"), 0.9).collect()  # evicts the first entry
-    assert len(D._CAND_CACHE) == 1
+    assert len(memo.entries("containment_cand")) == 1
     assert sorted(map(tuple, first.collect())) == rows
-    D.clear_dedup_caches()
+    memo.clear()
 
 def test_dup_marked_memo_shared_and_spans_kernel_identical(spark):
     """Optimization r14: (a) substring_dup_spans and substring_dedup_clean
@@ -1245,7 +1232,7 @@ def test_dup_marked_memo_shared_and_spans_kernel_identical(spark):
 
     from mover_spark.operators import dedup as D
 
-    D.clear_dedup_caches()
+    memo.clear()
     min_len = 3
     docs = [
         (1, "a b c d e f g h"),                # first occurrences
@@ -1261,8 +1248,8 @@ def test_dup_marked_memo_shared_and_spans_kernel_identical(spark):
         for r in D.substring_dup_spans(df, min_len=min_len).collect()
     }
     _ = D.substring_dedup_clean(df, min_len=min_len).collect()
-    marked_keys = [k for k in D._SIG_CACHE if "dup_marked" in str(k)]
-    assert len(marked_keys) == 1, f"expected one shared entry, got {marked_keys}"
+    marked = memo.entries("dup_marked")
+    assert len(marked) == 1, f"expected one shared entry, got {marked}"
     # the r13 window kernel, verbatim, over the same marked positions
     dups = D._dup_marked_positions(df, min_len, "text", "doc_id")
     wdoc = (
@@ -1297,19 +1284,20 @@ def test_dup_marked_memo_shared_and_spans_kernel_identical(spark):
         assert got[doc_id][1] == n_removed, (doc_id, got[doc_id], n_removed)
     assert got[3][1] == got[3][0]  # exact copy: every token covered
     assert got[4][1] == 0  # zero-dup doc attached by the left join
-    D.clear_dedup_caches()
-    assert not any("dup_marked" in str(k) for k in D._SIG_CACHE)
+    memo.clear()
+    assert not memo.entries("dup_marked")
 
 
 def test_shingle_udf_runs_once_per_doc(spark):
-    """Both shingle builds evaluate the shingle UDF once per doc (one
-    ArrowEvalPython node; a filter on the shingle array itself is pushed
-    below the projection and runs the UDF a second time) and keep the rows
-    of that filter on edge texts: null, empty, one word, a double space, a
-    trailing space."""
+    """All three shingle builds (the hashed shingles, the containment
+    representatives and the signature projection) evaluate the shingle UDF
+    once per doc (one ArrowEvalPython [sh(...)] node; a filter on the
+    shingle array itself is pushed below the projection and runs the UDF a
+    second time) and keep the rows of that filter on edge texts: null,
+    empty, one word, a double space, a trailing space."""
     from mover_spark.operators import dedup as D
 
-    D.clear_dedup_caches()
+    memo.clear()
     df = spark.createDataFrame(
         [(1, None), (2, ""), (3, "one"), (4, "a  b"), (5, "a b "), (6, "x y z"), (7, "x y z")],
         "doc_id long, text string",
@@ -1325,12 +1313,17 @@ def test_shingle_udf_runs_once_per_doc(spark):
     assert sorted(r.doc for r in want) == [4, 5, 6, 7]
     shingles = D._hashed_shingles(df)
     tagged = D._containment_reps(df)[0]
-    for built in (shingles, tagged):
+    projection = D.signature_projection(df)
+    for built in (shingles, tagged, projection):
         plan = built._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("ArrowEvalPython") == 1, plan
+        assert plan.count("ArrowEvalPython [sh(") == 1, plan
     assert sorted(map(tuple, shingles.collect())) == sorted(map(tuple, want))
+    want_sh = df.select("doc_id", D.shingles_udf()(F.col("text")).alias("sh"))
+    assert sorted((r.doc_id, r.sh) for r in projection.collect()) == sorted(
+        (r.doc_id, r.sh) for r in want_sh.collect() if r.sh
+    )
     # docs 6 and 7 share a shingle set: one representative
     assert sorted(map(tuple, tagged.collect())) == sorted(
         (r.doc, r.hs) for r in want if r.doc != 7
     )
-    D.clear_dedup_caches()
+    memo.clear()

@@ -10,6 +10,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from mover_spark import memo
 from mover_spark.operators.retrieval import bm25_topk, hybrid_topk, rrf_fuse
 from mover_spark.plans.audit import audit_plan
 
@@ -220,24 +221,62 @@ def test_bm25_plan_shape(spark, catalog):
     assert not facts["has_python_eval"]
 
 
+def test_memo_misses_after_same_name_rewrite(spark, tmp_path):
+    """A corpus rewritten in place under the same file name and read fresh
+    gets the answers of a cold run, from bm25_topk and minhash_lsh_pairs
+    alike. Two fresh reads of one path share a plan semanticHash, so only
+    the memo's file stamp (path, size, mtime) tells them apart."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mover_spark.operators.dedup import minhash_lsh_pairs
+
+    memo.clear()
+    corpus_dir = tmp_path / "corpus"
+    corpus_dir.mkdir()
+    docs = [(1, "spark join plan tuning guide"), (2, "other words entirely here now")]
+
+    def write_and_read(rows):
+        table = pa.table({
+            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+            "text": pa.array([r[1] for r in rows], pa.string()),
+        })
+        pq.write_table(table, str(corpus_dir / "documents.parquet"))
+        return spark.read.parquet(str(corpus_dir))
+
+    queries = spark.createDataFrame([(1, "spark join")], "query_id int, query_text string")
+
+    def answers(df):
+        return (
+            sorted(map(tuple, bm25_topk(df, queries).collect())),
+            sorted(map(tuple, minhash_lsh_pairs(df, 0.8).collect())),
+        )
+
+    before = answers(write_and_read(docs))
+    after = answers(write_and_read(docs + [(3, "spark join plan tuning guide")]))
+    memo.clear()
+    cold = answers(spark.read.parquet(str(corpus_dir)))
+    assert cold[1] == [(1, 3, 1.0)] and cold[0] != before[0], "the rewrite must change both answers"
+    assert after == cold
+    memo.clear()
+
+
 def test_tf_relation_memoized_and_output_neutral(spark, corpus):
     """Optimization r14 (VERDICT r13 next #6): bm25_topk's four tf
     consumers (postings, dl, df, stats) read ONE persisted memoized
     (doc_id, term, tf) relation — the before-plan tokenized the corpus
     four times because column pruning defeats ReusedExchange — and the
     memo is output-neutral: warm rows equal cold rows."""
-    from mover_spark.operators import retrieval as R
-
-    R.clear_retrieval_caches()
+    memo.clear()
     queries = spark.createDataFrame(
         [(1, "spark join")], "query_id int, query_text string"
     )
     cold = sorted(map(tuple, bm25_topk(corpus, queries).collect()))
-    assert len(R._TF_CACHE) == 1
-    entry = next(iter(R._TF_CACHE.values()))
+    assert len(memo.entries("bm25_tf")) == 1
+    entry = memo.entries("bm25_tf")[0]
     assert entry.storageLevel.useMemory or entry.storageLevel.useDisk
     warm = sorted(map(tuple, bm25_topk(corpus, queries).collect()))
-    assert next(iter(R._TF_CACHE.values())) is entry  # hit, not a rebuild
+    assert memo.entries("bm25_tf")[0] is entry  # hit, not a rebuild
     assert cold, "fixture must retrieve at least one document"
     assert warm == cold
     # every tf consumer reads the persisted relation in the warm plan
@@ -245,5 +284,5 @@ def test_tf_relation_memoized_and_output_neutral(spark, corpus):
         bm25_topk(corpus, queries)._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("InMemoryTableScan") >= 3, plan
-    R.clear_retrieval_caches()
-    assert not R._TF_CACHE
+    memo.clear()
+    assert not memo.entries("bm25_tf")

@@ -1,6 +1,7 @@
 """semantic_dedup (SemDeDup): within-cell dedup semantics, the documented
 cross-cell blocking approximation, quantizer modes, and edge cases."""
 
+from mover_spark import memo
 from mover_spark.operators.similarity import semantic_dedup
 
 
@@ -304,3 +305,26 @@ def test_subdivide_executor_matches_driver_reference(spark):
         )
     )
     assert base == same
+
+
+def test_assignment_checkpoint_owned_by_session_memo(spark):
+    """The cell-assignment checkpoint belongs to the session memo: three
+    calls on one input leave one checkpoint in storage, and memo.clear()
+    releases it while a caller still holds a result."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def stored():
+        return {i.id() for i in sc.getRDDStorageInfo()}
+
+    memo.clear()
+    v = [1.0, 2.0, 3.0, 4.0]
+    df = _emb(spark, [(0, v), (1, [4.0, -3.0, 2.0, -1.0]), (5, list(v)), (9, list(v))])
+    before = stored()
+    held = semantic_dedup(df, threshold=0.9, n_cells=2)
+    rows = sorted(map(tuple, held.collect()))
+    for _ in range(2):
+        assert sorted(map(tuple, semantic_dedup(df, threshold=0.9, n_cells=2).collect())) == rows
+    new = stored() - before
+    assert len(new) == 1, f"{len(new)} checkpoints left by three calls"
+    memo.clear()
+    assert not stored() & new, "memo.clear() left the assignment checkpoint in storage"

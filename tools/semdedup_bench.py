@@ -80,7 +80,7 @@ def main() -> int:
         os.makedirs(fix_dir, exist_ok=True)
         perturbed_embeddings(spark, n).write.mode("overwrite").parquet(path)
 
-    from mover_spark.operators.dedup import clear_dedup_caches
+    from mover_spark import memo
     from mover_spark.operators.similarity import (
         auto_ivf_params,
         semantic_dedup,
@@ -117,7 +117,7 @@ def main() -> int:
         F.avg("n_comp").alias("avg_components"),
     ).collect()[0]
     out.unpersist()
-    clear_dedup_caches()
+    memo.clear()
     print(
         json.dumps(
             {

@@ -40,7 +40,7 @@ def main() -> int:
     import semdedup_bench as sb
 
     import mover_spark.operators.similarity as S
-    from mover_spark.operators.dedup import clear_dedup_caches
+    from mover_spark import memo
     from mover_spark.operators.similarity import (
         auto_ivf_params,
         train_ivf_centroids,
@@ -79,7 +79,7 @@ def main() -> int:
             ).collect()[0]
             sec = round(time.monotonic() - t0, 1)
             out.unpersist()
-            clear_dedup_caches()
+            memo.clear()
             return sec, (int(d.n), int(d.kept), int(d.hsum))
         finally:
             S._subdivide_cells = orig
