@@ -1296,6 +1296,19 @@ def _q_dedup_incremental(spark, sf_dir):
     )
 
 
+def _sig_index_root(sf_dir):
+    """Where the signature-index queries keep their indexes for one sf
+    dir, keyed by the index format version: a build reading another
+    format rebuilds its own fixture instead of raising on the old one."""
+    from mover_spark.operators.dedup import SIG_INDEX_VERSION
+
+    return os.path.join(
+        "/tmp/mover_spark_sigindex",
+        f"v{SIG_INDEX_VERSION}",
+        os.path.basename(os.path.normpath(sf_dir)),
+    )
+
+
 def _q_dedup_incremental_appended(spark, sf_dir):
     """The day-N -> day-N+1 index mutation: the base index is written over
     everything except src0/src1/src2, then src2 (day N's survivors) is
@@ -1315,11 +1328,7 @@ def _q_dedup_incremental_appended(spark, sf_dir):
 
     docs = _catalog(spark, sf_dir).df("documents")
     new = docs.where(F.col("source").isin("src0", "src1"))
-    path = os.path.join(
-        "/tmp/mover_spark_sigindex",
-        os.path.basename(os.path.normpath(sf_dir)),
-        "appended",
-    )
+    path = os.path.join(_sig_index_root(sf_dir), "appended")
     # post-append marker, not meta: a run killed between write and append
     # must rebuild, or src2 would silently vanish from the base forever
     done = os.path.join(path, "_append_complete")
@@ -1355,11 +1364,7 @@ def _q_dedup_incremental_persisted(spark, sf_dir):
     docs = _catalog(spark, sf_dir).df("documents")
     new = docs.where(F.col("source").isin("src0", "src1"))
     base = docs.where(~F.col("source").isin("src0", "src1"))
-    path = os.path.join(
-        "/tmp/mover_spark_sigindex",
-        os.path.basename(os.path.normpath(sf_dir)),
-        "base",
-    )
+    path = os.path.join(_sig_index_root(sf_dir), "base")
     if not os.path.exists(os.path.join(path, "meta")):
         write_signature_index(base, path)
     return (

@@ -25,7 +25,6 @@ from ..operators.dedup import (
     qcosine,
     qdot,
     quantized_vec,
-    shingles_col,
     shingles_udf,
     simhash_col,
     simhash_udf,
@@ -41,7 +40,6 @@ __all__ = [
     "qcosine",
     "qdot",
     "quantized_vec",
-    "shingles_col",
     "shingles_udf",
     "simhash_col",
     "simhash_udf",

@@ -90,26 +90,13 @@ def words_col(text: Column | str = "text") -> Column:
     return F.split(c, " ")
 
 
-def shingles_col(text: Column | str = "text", n: int = 2) -> Column:
-    """Distinct word n-gram shingles as array<string> (JVM-side transform,
-    no explode). Guarded for docs shorter than n words (Spark's sequence()
-    runs DESCENDING when start > stop)."""
-    w = words_col(text)
-    idx = F.sequence(F.lit(1), F.size(w) - (n - 1))
-    joined = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(w, i + k) for k in range(n)]),
-    )
-    return F.when(F.size(w) >= n, F.array_distinct(joined)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def shingles_udf(n: int = 2):
-    """Arrow-vectorized shingle builder — same string set as shingles_col
-    (Python str.split(' ') matches Spark split-with-limit=-1 on literal
-    space, including empty tokens; dict.fromkeys == array_distinct). The
-    interpreted concat_ws/element_at HOF chain was the single costliest step
+    """Arrow-vectorized shingle builder: the distinct word n-grams of each
+    text, in first-occurrence order, as array<string>; texts under n words
+    (and NULL) give an empty array. Tokens are Python str.split(' '), which
+    matches Spark split-with-limit=-1 on a literal space, empty tokens
+    included (the DuckDB oracles split the same way). An interpreted
+    concat_ws/element_at higher-order chain was the single costliest step
     of every shingle-based pipeline."""
 
     @F.pandas_udf("array<string>")
@@ -229,9 +216,9 @@ def ngram_jaccard_pairs(
     # pair), so candidates can only differ in tie-breaks between
     # equal-frequency shingles — and the exact verify discards the
     # difference. Collision caveat unchanged (~n_sh^2/2^64, the hashed
-    # domain the verify already lived in). Shares the session-registry
-    # projection with the containment family: one cached copy per corpus.
-    sh = _hashed_shingles(df, text_col, id_col)
+    # domain the verify already lived in). Reads the corpus shingle
+    # relation every shingle consumer shares: one cached copy per corpus.
+    sh = _corpus_shingles(df, text_col, id_col)
     # global rare-first order materializes as struct sort keys — no global
     # row_number (which would single-partition at scale); the sorted
     # relation is the memoized _freq_sorted_docs shared with containment
@@ -306,7 +293,7 @@ def containment_pairs(
     up front, so every downstream shuffle, sort, join key, and intersect
     works on longs instead of bigram strings — the single biggest
     constant-factor cost on a shingle-heavy corpus)."""
-    sh = _hashed_shingles(df, text_col, id_col)
+    sh = _corpus_shingles(df, text_col, id_col)
     docs = _freq_sorted_docs(df, text_col, id_col)
     # required overlap o = ceil(t * n_a), computed as ceil(t*n - 1e-9):
     # the epsilon guards the binary-float boundary (fl(0.9)*n can land one
@@ -633,25 +620,14 @@ def _containment_band_schemes(
     return best
 
 
-def _nonempty_hashed_shingles(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(doc, hs): the xxhash64'd 2-shingles of every doc that has any.
-    The filter is the shingle UDF's own non-empty condition (at least two
-    space-separated tokens), evaluated on the text before the UDF runs: a
-    filter on hs is pushed below the projection, and the UDF then runs
-    twice per doc."""
-    n = 2
-    return df.where(F.size(F.split(F.col(text_col), " ")) >= n).select(
-        F.col(id_col).alias("doc"),
-        F.transform(shingles_udf(n)(F.col(text_col)), lambda s: F.xxhash64(s)).alias("hs"),
-    )
-
-
 def _containment_reps(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
     """(reps, members) — one representative doc per DISTINCT SHINGLE SET
     (reps: (doc, hs)), plus the rep-doc -> member map (members:
-    (rep, doc)), both persisted and memoized.
+    (rep, doc)), both unpersisted projections of the corpus shingle
+    relation (_corpus_shingles), whose rep column names each doc's
+    representative.
 
     Containment is a pure function of the two shingle sets, so docs with
     identical sets are interchangeable in BOTH pair positions — banding
@@ -659,36 +635,10 @@ def _containment_reps(
     cluster of m docs puts m rows in every one of its band buckets and
     m^2 rows through every band join. Collapsing to representatives makes
     the candidate stage scale with DISTINCT content; the (quadratic, but
-    output-sized) member expansion happens after exact verification.
-
-    MEMORY SHAPE (the sf100 OOM fix): ONE persisted corpus-sized array
-    relation — tagged (doc, hs, rep) — with reps and members as
-    unpersisted projections over it. The pre-fix shape persisted the
-    shingle arrays TWICE (once in _hashed_shingles' shared cache, again
-    inside reps) next to the signature cache: ~17.6 GB of requested
-    blocks against a 16g heap, java.lang.OutOfMemoryError at 5M docs.
-    tagged therefore builds straight from the shingle EXPRESSION, not
-    from the persisted _hashed_shingles relation — in this flow the
-    shingles have exactly one downstream consumer (this build), so
-    caching them separately bought nothing and cost a full second copy.
-    (The exact operator keeps its own _hashed_shingles cache; at the
-    fixture scales where both run in one session the overlap is MBs.)
-    Storage level stays the default MEMORY_AND_DISK: a DISK_ONLY variant
-    re-deserialized the array columns on every one of the ~6 consumer
-    scans and measured 3x slower end-to-end at sf10 (276.7 vs 93.8 s)."""
-
-    def build() -> DataFrame:
-        return (
-            _nonempty_hashed_shingles(df, text_col, id_col)
-            .select("doc", "hs", F.xxhash64(F.array_sort("hs")).alias("sd"))
-            .withColumn("rep", F.min("doc").over(Window.partitionBy("sd")))
-            .select("doc", "hs", "rep")
-            .persist()
-        )
-
-    tagged = memo.cached(df, "containment_tagged", text_col, id_col, build=build)
-    reps = tagged.where(F.col("doc") == F.col("rep")).select("doc", "hs")
-    members = tagged.select("rep", "doc")
+    output-sized) member expansion happens after exact verification."""
+    rel = _corpus_shingles(df, text_col, id_col)
+    reps = rel.where(F.col("doc") == F.col("rep")).select("doc", "hs")
+    members = rel.select("rep", "doc")
     return reps, members
 
 
@@ -1139,8 +1089,9 @@ def containment_lsh(
     below any fixed banding threshold. LSH Ensemble's move (public art:
     Zhu et al., VLDB 2016) is to partition by SET SIZE — within a bounded
     size-ratio class the containment threshold maps to a Jaccard floor a
-    class-specific band scheme can serve. Shares _hashed_shingles with
-    the exact operator (one corpus pass, memoized)."""
+    class-specific band scheme can serve. Reads the corpus shingle
+    relation (_corpus_shingles) every shingle consumer shares: one corpus
+    pass, memoized."""
     reps, members = _containment_reps(df, text_col, id_col)
     # SHARED CANDIDATE RELATION ACROSS ARMS (optimization r14, VERDICT
     # r13 next #2; the lsh_pairs / _freq_sorted_docs pattern): the
@@ -1691,28 +1642,13 @@ def substring_dup_spans(
 # MinHash + LSH (scale path)
 # ---------------------------------------------------------------------------
 
-def minhash_signature_cols(sh: Column) -> list[Column]:
-    """48 minhash values: min over shingles of (a*xxhash64(s)+b) mod p.
-    Pure array expressions — no explode, no UDF. Kept as the dependency-free
-    reference; the hot path uses minhash_signature_udf (identical values)."""
-    h = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE_P)))
-    sigs = []
-    for i in range(N_MINHASH):
-        a, b = MINHASH_A[i], MINHASH_B[i]
-        sigs.append(
-            F.array_min(
-                F.transform(h, lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(MERSENNE_P)))
-            ).alias(f"mh_{i}")
-        )
-    return sigs
-
-
 def minhash_signature_udf(a_consts=None, b_consts=None):
     """Arrow-vectorized minhash: one (n_perm x n_shingle) numpy broadcast
     per row instead of n_perm interpreted array traversals. Input: the
-    pmod(xxhash64(shingle), p) array (hashing stays JVM-side so values match
-    minhash_signature_cols bit-for-bit); a*x < 2^31 * 2^31 = 2^62 never
-    overflows int64, and numpy % equals Spark pmod on non-negatives.
+    pmod(hs, p) array of a doc's xxhash64'd shingles (hashing stays
+    JVM-side); value i is min over shingles of (a_i*x + b_i) mod p.
+    a*x < 2^31 * 2^31 = 2^62 never overflows int64, and numpy % equals
+    Spark pmod on non-negatives.
     Defaults to the shared 48-perm Jaccard pool; the containment operator
     passes its dedicated longer pool (CONTAIN_A/B)."""
     A = np.array(a_consts or MINHASH_A, dtype=np.int64)[:, None]
@@ -1735,25 +1671,13 @@ def minhash_signature_udf(a_consts=None, b_consts=None):
     return sig
 
 
-def _hashed_shingles(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc, hs) — xxhash64'd shingle array per non-empty doc, persisted
-    and memoized per corpus. Shared by the exact containment operator and
-    its LSH-Ensemble twin: one copy per corpus, however many calls."""
-    return memo.cached(
-        df, "containment_sh", text_col, id_col,
-        build=lambda: _nonempty_hashed_shingles(df, text_col, id_col).persist(),
-    )
-
-
 def _freq_sorted_docs(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(doc, sorted_sh, n) — each doc's hashed shingles as (freq, tok)
     structs sorted rare-first by corpus frequency, the shared input of
     every prefix-filter join (PPJoin Jaccard + asymmetric containment).
-    Persisted and memoized like _hashed_shingles: the relation is
+    Persisted and memoized like _corpus_shingles: the relation is
     threshold-independent, both exact pair operators derive their
     prefixes/postings from it, and within one containment query the A
     (prefix) and B (full postings) branches diverge ABOVE the final
@@ -1762,7 +1686,7 @@ def _freq_sorted_docs(
     sort_array runs once per branch."""
 
     def build() -> DataFrame:
-        tok = _hashed_shingles(df, text_col, id_col).select(
+        tok = _corpus_shingles(df, text_col, id_col).select(
             "doc", F.explode("hs").alias("tok")
         )
         freq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
@@ -1784,40 +1708,75 @@ def _freq_sorted_docs(
 def signature_projection(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, sh, mhs) per non-empty doc — shingle set + 48-value minhash
-    signature — as a plain (non-persisted) projection. THE one definition
-    of the shingle→hash→minhash chain: batch consumers get it memoized
-    via _signatures; the streaming near-dup probe applies it per
+    """(id, hs, mhs) per non-empty doc — the xxhash64'd 2-shingle set and
+    its 48-value minhash signature — as a plain (non-persisted)
+    projection. THE one definition of the shingle→hash→minhash chain:
+    batch consumers read it memoized, as _corpus_shingles; the signature
+    index stores it; the streaming near-dup probe applies it per
     micro-batch (a streaming DF can't persist). Any change here reaches
-    both sides at once — a second copy of this chain drifting would make
-    stream and corpus band hashes silently never match. The non-empty
-    filter runs on the text, before the shingle UDF (see
-    _nonempty_hashed_shingles)."""
-    sh = df.where(F.size(F.split(F.col(text_col), " ")) >= 2).select(
-        F.col(id_col), shingles_udf()(F.col(text_col)).alias("sh")
+    all three at once — a second copy of this chain drifting would make
+    stream, index and corpus band hashes silently never match.
+
+    The non-empty filter is the shingle UDF's own condition (at least two
+    space-separated tokens), evaluated on the text before the UDF runs: a
+    filter on hs is pushed below the projection, and the UDF then runs
+    twice per doc. The minhash input pmod(hs, p) is pmod(xxhash64(s), p)
+    of each string shingle s."""
+    n = 2
+    hs = df.where(F.size(F.split(F.col(text_col), " ")) >= n).select(
+        F.col(id_col),
+        F.transform(shingles_udf(n)(F.col(text_col)), lambda s: F.xxhash64(s)).alias("hs"),
     )
     mh = minhash_signature_udf()
-    return sh.select(
+    return hs.select(
         id_col,
-        "sh",
-        mh(
-            F.transform("sh", lambda s: F.pmod(F.xxhash64(s), F.lit(MERSENNE_P)))
-        ).alias("mhs"),
+        "hs",
+        mh(F.transform("hs", lambda h: F.pmod(h, F.lit(MERSENNE_P)))).alias("mhs"),
     )
 
 
-def _signatures(
+def _corpus_shingles(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """signature_projection, persisted and memoized per corpus."""
-    return memo.cached(
-        df, "signatures", text_col, id_col,
-        build=lambda: signature_projection(df, text_col, id_col).persist(),
-    )
+    """(doc, hs, mhs, rep) — THE shingle relation of a corpus, persisted
+    and memoized per (corpus, text_col, id_col): signature_projection
+    plus rep, the smallest doc id with the same shingle set. Every
+    shingle consumer in a session reads it — the exact pair operators,
+    doc_novelty, MinHash LSH pairs, similar_docs, incremental dedup, the
+    streaming probe's corpus side and containment_lsh's representatives —
+    so a corpus is shingled once, by one UDF pass.
+
+    MEMORY SHAPE (the sf100 OOM fix, now for the whole family): ONE
+    persisted corpus-sized array relation, with every other shingle view
+    an unpersisted projection over it. An earlier shape persisted the
+    shingle arrays twice for containment alone (a shared hashed copy and
+    again inside the representatives) next to a string-shingle signature
+    cache: ~17.6 GB of requested blocks against a 16g heap,
+    java.lang.OutOfMemoryError at 5M docs. Shingles are held as xxhash64
+    longs, never strings: every verify intersects hs arrays. Storage level
+    stays the default MEMORY_AND_DISK: a DISK_ONLY variant
+    re-deserialized the array columns on every one of the ~6 consumer
+    scans and measured 3x slower end-to-end at sf10 (276.7 vs 93.8 s)."""
+
+    def build() -> DataFrame:
+        return (
+            signature_projection(df, text_col, id_col)
+            .select(
+                F.col(id_col).alias("doc"),
+                "hs",
+                "mhs",
+                F.xxhash64(F.array_sort("hs")).alias("sd"),
+            )
+            .withColumn("rep", F.min("doc").over(Window.partitionBy("sd")))
+            .select("doc", "hs", "mhs", "rep")
+            .persist()
+        )
+
+    return memo.cached(df, "shingles", text_col, id_col, build=build)
 
 
-def _band_bucket_rows(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, band, bucket) LSH band rows from a signature projection —
+def _band_bucket_rows(sig: DataFrame) -> DataFrame:
+    """(doc, band, bucket) LSH band rows from a (doc, mhs) signature —
     band b's bucket is the xxhash64 of its rows-per-band signature slice,
     the SAME values streaming/neardup._band_hashes computes, so batch and
     stream band collisions agree by construction."""
@@ -1831,9 +1790,9 @@ def _band_bucket_rows(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
         )
         for bi in range(LSH_BANDS)
     ]
-    return sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    return sig.select("doc", F.explode(F.array(*band_cols)).alias("bb")).select(
+        "doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
 
 
 def minhash_lsh_pairs(
@@ -1847,15 +1806,15 @@ def minhash_lsh_pairs(
     Plan shape at scale: one narrow pass computes signatures, a small
     explode (LSH_BANDS rows/doc) shuffles by (band, bucket-hash), the
     self-join touches only colliding candidates, then the verify join
-    fetches the two shingle arrays per candidate. Everything else never
-    leaves the executors. Verified output == exact ngram_jaccard_pairs
+    fetches the two hashed shingle arrays per candidate. Everything else
+    never leaves the executors. Verified output == exact ngram_jaccard_pairs
     whenever LSH recall is 1 (P(miss) < 1e-5 at j >= threshold+0.1).
 
     The verified pair set is persisted and memoized per (corpus plan,
     params) — downstream consumers (triangle counting, clustering, the
     canonical-keeper filter) share one enumeration instead of re-running
-    the pipeline, and the signature pass is shared with similar_docs via
-    the signature memo."""
+    the pipeline, and the signature pass is the corpus shingle relation
+    (_corpus_shingles) every shingle consumer shares."""
     return memo.cached(
         df, "lsh_pairs", threshold, text_col, id_col,
         build=lambda: _lsh_pairs(df, threshold, text_col, id_col).persist(),
@@ -1863,11 +1822,11 @@ def minhash_lsh_pairs(
 
 
 def _lsh_pairs(df: DataFrame, threshold: float, text_col: str, id_col: str) -> DataFrame:
-    sig = _signatures(df, text_col, id_col)
-    buckets = _band_bucket_rows(sig, id_col)
+    sig = _corpus_shingles(df, text_col, id_col)
+    buckets = _band_bucket_rows(sig)
 
-    left = buckets.select(F.col(id_col).alias("doc_a"), "band", "bucket")
-    right = buckets.select(F.col(id_col).alias("doc_b"), "band", "bucket")
+    left = buckets.select(F.col("doc").alias("doc_a"), "band", "bucket")
+    right = buckets.select(F.col("doc").alias("doc_b"), "band", "bucket")
     candidates = (
         left.join(right, on=["band", "bucket"])
         .where(F.col("doc_a") < F.col("doc_b"))
@@ -1875,12 +1834,12 @@ def _lsh_pairs(df: DataFrame, threshold: float, text_col: str, id_col: str) -> D
         .distinct()
     )
 
-    sha = sig.select(F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
-    shb = sig.select(F.col(id_col).alias("doc_b"), F.col("sh").alias("sh_b"))
+    sha = sig.select(F.col("doc").alias("doc_a"), F.col("hs").alias("hs_a"))
+    shb = sig.select(F.col("doc").alias("doc_b"), F.col("hs").alias("hs_b"))
     return (
         candidates.join(sha, "doc_a")
         .join(shb, "doc_b")
-        .withColumn("jaccard", F.round(jaccard_col(F.col("sh_a"), F.col("sh_b")), 6))
+        .withColumn("jaccard", F.round(jaccard_col(F.col("hs_a"), F.col("hs_b")), 6))
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -1908,8 +1867,8 @@ def dedup_against_base(
       j >= threshold+0.1 with 12 bands × 4 rows).
 
     The base signature pass is persisted and memoized per corpus plan
-    (_signatures), so successive increments deduped against the same base
-    in one session pay the base scan once. Within-batch duplicates are out
+    (_corpus_shingles), so successive increments deduped against the same
+    base in one session pay the base scan once. Within-batch duplicates are out
     of scope here — compose with exact_dedup / dedup_keep_canonical on the
     increment itself.
 
@@ -1917,7 +1876,7 @@ def dedup_against_base(
     near phase (the exact phase still catches byte-identical copies) —
     mirrored by the oracle's len(sh) > 0 guards."""
     base_fp = base_df.select(F.md5(F.col(text_col)).alias("__fp")).distinct()
-    sig_base = _signatures(base_df, text_col, id_col)
+    sig_base = _corpus_shingles(base_df, text_col, id_col)
     return _survivors_vs_base_state(
         new_df, base_fp, sig_base, threshold, text_col, id_col
     )
@@ -1932,27 +1891,27 @@ def _survivors_vs_base_state(
     id_col: str,
 ) -> DataFrame:
     """Core of incremental dedup given PRECOMPUTED base state — the digest
-    set (__fp) and the signature projection (id, sh, mhs) — regardless of
+    set (__fp) and the signatures (doc, hs, mhs) — regardless of
     whether that state was derived live (dedup_against_base) or loaded
     from a persisted cross-run index (dedup_against_index). Single
     definition so the live and indexed paths cannot drift."""
     survivors = new_df.join(
         base_fp, F.md5(F.col(text_col)) == F.col("__fp"), "left_anti"
     )
-    sig_new = _signatures(new_df, text_col, id_col)
-    bn = _band_bucket_rows(sig_new, id_col).select(
-        F.col(id_col).alias("doc_new"), "band", "bucket"
+    sig_new = _corpus_shingles(new_df, text_col, id_col)
+    bn = _band_bucket_rows(sig_new).select(
+        F.col("doc").alias("doc_new"), "band", "bucket"
     )
-    bb = _band_bucket_rows(sig_base, id_col).select(
-        F.col(id_col).alias("doc_base"), "band", "bucket"
+    bb = _band_bucket_rows(sig_base).select(
+        F.col("doc").alias("doc_base"), "band", "bucket"
     )
     cand = bn.join(bb, on=["band", "bucket"]).select("doc_new", "doc_base").distinct()
-    sha = sig_new.select(F.col(id_col).alias("doc_new"), F.col("sh").alias("sh_n"))
-    shb = sig_base.select(F.col(id_col).alias("doc_base"), F.col("sh").alias("sh_b"))
+    sha = sig_new.select(F.col("doc").alias("doc_new"), F.col("hs").alias("hs_n"))
+    shb = sig_base.select(F.col("doc").alias("doc_base"), F.col("hs").alias("hs_b"))
     near = (
         cand.join(sha, "doc_new")
         .join(shb, "doc_base")
-        .where(F.round(jaccard_col(F.col("sh_n"), F.col("sh_b")), 6) >= threshold)
+        .where(F.round(jaccard_col(F.col("hs_n"), F.col("hs_b")), 6) >= threshold)
         .select("doc_new")
         .distinct()
     )
@@ -1966,8 +1925,25 @@ def _survivors_vs_base_state(
 # ---------------------------------------------------------------------------
 
 #: bump when the on-disk layout or any hashing constant scheme changes —
-#: readers refuse a mismatched index instead of silently mis-deduping
-SIG_INDEX_VERSION = 1
+#: readers refuse a mismatched index instead of silently mis-deduping.
+#: Version 2 stores hashed shingles (hs), version 1 stored strings (sh).
+SIG_INDEX_VERSION = 2
+
+
+def _write_index_meta(spark, path: str, id_col: str, n_docs: int) -> None:
+    spark.createDataFrame(
+        [(SIG_INDEX_VERSION, N_MINHASH, LSH_BANDS, id_col, n_docs)],
+        "version int, n_minhash int, lsh_bands int, id_col string, n_docs long",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+
+
+def _write_counted(df: DataFrame, mode: str, path: str) -> int:
+    """Write df as parquet and return the rows written, observed on the
+    write job itself: a count() or a read-back would be a second job, and
+    for signatures a re-run of the full shingle + minhash Arrow pass."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode).parquet(path)
+    return obs.get["rows"]
 
 
 def write_signature_index(
@@ -1978,10 +1954,10 @@ def write_signature_index(
     every increment re-pays the full base signature pass (the dominant
     cost at 100 TB — ~47 s even at sf10). Layout under `path`:
 
-    - ``signatures/`` (doc_id, sh, mhs): the exact signature_projection
-      output — shingle sets for exact-Jaccard verification plus the
-      48-value minhash signature band joins derive from. Columnar, so an
-      increment's band join reads mhs without touching sh until verify.
+    - ``signatures/`` (doc_id, hs, mhs): the exact signature_projection
+      output — hashed shingle sets for exact-Jaccard verification plus
+      the 48-value minhash signature band joins derive from. Columnar, so
+      an increment's band join reads mhs without touching hs until verify.
     - ``digests/``    (__fp): distinct md5(text) of the base — the exact
       phase's anti-join side (covers docs too short to shingle).
     - ``meta/``       one row pinning (version, n_minhash, lsh_bands,
@@ -1991,20 +1967,13 @@ def write_signature_index(
 
     Overwrites atomically per dataset (Spark overwrite mode). The writer
     is the only full-corpus pass; readers are increment-sized jobs."""
-    spark = base_df.sparkSession
-    sig = signature_projection(base_df, text_col, id_col)
-    sig.write.mode("overwrite").parquet(f"{path}/signatures")
+    n_docs = _write_counted(
+        signature_projection(base_df, text_col, id_col), "overwrite", f"{path}/signatures"
+    )
     base_df.select(F.md5(F.col(text_col)).alias("__fp")).distinct().write.mode(
         "overwrite"
     ).parquet(f"{path}/digests")
-    # count the WRITTEN parquet, not sig: sig.count() would re-execute the
-    # full shingle+minhash Arrow pipeline — the exact full-corpus pass this
-    # index exists to pay only once
-    n_docs = spark.read.parquet(f"{path}/signatures").count()
-    spark.createDataFrame(
-        [(SIG_INDEX_VERSION, N_MINHASH, LSH_BANDS, id_col, n_docs)],
-        "version int, n_minhash int, lsh_bands int, id_col string, n_docs long",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    _write_index_meta(base_df.sparkSession, path, id_col, n_docs)
 
 
 def append_to_signature_index(
@@ -2036,19 +2005,11 @@ def append_to_signature_index(
     sig = signature_projection(increment_df, text_col, id_col)
     if meta.id_col != id_col:
         sig = sig.withColumnRenamed(id_col, meta.id_col)
-    sig = sig.persist()
-    try:
-        n = sig.count()
-        sig.write.mode("append").parquet(f"{path}/signatures")
-        increment_df.select(
-            F.md5(F.col(text_col)).alias("__fp")
-        ).distinct().write.mode("append").parquet(f"{path}/digests")
-    finally:
-        sig.unpersist()
-    spark.createDataFrame(
-        [(SIG_INDEX_VERSION, N_MINHASH, LSH_BANDS, meta.id_col, meta.n_docs + n)],
-        "version int, n_minhash int, lsh_bands int, id_col string, n_docs long",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    n = _write_counted(sig, "append", f"{path}/signatures")
+    increment_df.select(
+        F.md5(F.col(text_col)).alias("__fp")
+    ).distinct().write.mode("append").parquet(f"{path}/digests")
+    _write_index_meta(spark, path, meta.id_col, meta.n_docs + n)
     return n
 
 
@@ -2075,18 +2036,17 @@ def compact_signature_index(spark, path: str) -> int:
     read_signature_index(spark, path)  # validates version + constants
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
 
-    sig = spark.read.parquet(f"{path}/signatures").dropDuplicates([meta.id_col])
-    sig.write.mode("overwrite").parquet(f"{path}/signatures_compact")
+    n_docs = _write_counted(
+        spark.read.parquet(f"{path}/signatures").dropDuplicates([meta.id_col]),
+        "overwrite",
+        f"{path}/signatures_compact",
+    )
     spark.read.parquet(f"{path}/digests").distinct().write.mode(
         "overwrite"
     ).parquet(f"{path}/digests_compact")
     staged_swap(spark, path, "signatures")
     staged_swap(spark, path, "digests")
-    n_docs = spark.read.parquet(f"{path}/signatures").count()
-    spark.createDataFrame(
-        [(SIG_INDEX_VERSION, N_MINHASH, LSH_BANDS, meta.id_col, n_docs)],
-        "version int, n_minhash int, lsh_bands int, id_col string, n_docs long",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    _write_index_meta(spark, path, meta.id_col, n_docs)
     return n_docs
 
 
@@ -2136,7 +2096,7 @@ def dedup_against_index(
     Semantics are identical by construction (same _survivors_vs_base_state
     core, same stored signature_projection definition)."""
     sig_base, base_fp = read_signature_index(
-        new_df.sparkSession, index_path, id_col
+        new_df.sparkSession, index_path, "doc"
     )
     return _survivors_vs_base_state(
         new_df, base_fp, sig_base, threshold, text_col, id_col
@@ -2621,43 +2581,31 @@ def similar_docs(
     of this document" primitive at 100 TB. Candidates are verified with
     exact Jaccard, so results match brute force whenever LSH recall is 1
     (P(miss) < 1e-5 at j >= threshold+0.1, same banding as the pair
-    enumeration). Shares the persisted corpus signature memo with
+    enumeration). Shares the persisted corpus shingle relation with
     minhash_lsh_pairs."""
-    rows_per_band = N_MINHASH // LSH_BANDS
-    sig = _signatures(df, text_col, id_col)
-    band_cols = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.xxhash64(*[F.col("mhs")[bi * rows_per_band + r] for r in range(rows_per_band)]).alias("bucket"),
-        )
-        for bi in range(LSH_BANDS)
-    ]
-    buckets = sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    sig = _corpus_shingles(df, text_col, id_col)
+    buckets = _band_bucket_rows(sig)
 
     qb = (
-        buckets.where(F.col(id_col).isin(query_ids))
-        .select(F.col(id_col).alias("query_id"), "band", "bucket")
+        buckets.where(F.col("doc").isin(query_ids))
+        .select(F.col("doc").alias("query_id"), "band", "bucket")
     )
     cand = (
         F.broadcast(qb)
         .join(buckets, on=["band", "bucket"])
-        .where(F.col("query_id") != F.col(id_col))
-        .select("query_id", F.col(id_col).alias("neighbor_id"))
+        .where(F.col("query_id") != F.col("doc"))
+        .select("query_id", F.col("doc").alias("neighbor_id"))
         .distinct()
     )
-    shq = sig.select(F.col(id_col).alias("query_id"), F.col("sh").alias("sh_q"))
-    shn = sig.select(F.col(id_col).alias("neighbor_id"), F.col("sh").alias("sh_n"))
-    from pyspark.sql.window import Window
-
+    shq = sig.select(F.col("doc").alias("query_id"), F.col("hs").alias("hs_q"))
+    shn = sig.select(F.col("doc").alias("neighbor_id"), F.col("hs").alias("hs_n"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("jaccard"), F.asc("neighbor_id")
     )
     return (
         cand.join(shq, "query_id")
         .join(shn, "neighbor_id")
-        .withColumn("jaccard", F.round(jaccard_col(F.col("sh_q"), F.col("sh_n")), 6))
+        .withColumn("jaccard", F.round(jaccard_col(F.col("hs_q"), F.col("hs_n")), 6))
         .where(F.col("jaccard") >= threshold)
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)

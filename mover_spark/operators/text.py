@@ -878,14 +878,14 @@ def doc_novelty(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     dedup threshold. Integer ratio -> exactly portable.
 
     Shape: the (doc, shingle)-distinct stream comes from the dedup
-    family's shared _hashed_shingles projection (one persisted hashed
-    copy per corpus, however many consumers in a session), aggregated
-    twice — NOT joined back: a shingle with corpus df == 1 names its
-    sole owner via min(doc), so n_unique per doc falls out of the
-    df-count aggregate itself and the second corpus-wide shuffle of the
-    (doc, shingle) stream that the join-back form paid is gone. The
-    per-doc total is a map-side-combinable count whose shuffle carries
-    one partial row per (partition, doc). Shingle keys are xxhash64
+    family's shared corpus shingle relation (dedup._corpus_shingles: one
+    persisted hashed copy per corpus, however many consumers in a
+    session), aggregated twice — NOT joined back: a shingle with corpus
+    df == 1 names its sole owner via min(doc), so n_unique per doc falls
+    out of the df-count aggregate itself and the second corpus-wide
+    shuffle of the (doc, shingle) stream that the join-back form paid is
+    gone. The per-doc total is a map-side-combinable count whose shuffle
+    carries one partial row per (partition, doc). Shingle keys are xxhash64
     longs, never bigram strings (the key only exists internally; same
     ~n²/2^64 collision caveat as the dedup family — the string-keyed
     DuckDB oracle would catch one).
@@ -900,10 +900,10 @@ def doc_novelty(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     Lifecycle note: the corpus shingle projection is persisted into the
     session memo (mover_spark.memo) as a side effect, one entry per
     corpus."""
-    from .dedup import _hashed_shingles
+    from .dedup import _corpus_shingles
 
     sh = (
-        _hashed_shingles(df, text_col, id_col)
+        _corpus_shingles(df, text_col, id_col)
         .where(F.col("doc").isNotNull())
         .select(F.col("doc").alias(id_col), F.explode("hs").alias("sh"))
     )

@@ -328,15 +328,13 @@ def run_to_memory(
     ``spark.sql.shuffle.partitions`` (captured at query START, so the
     batch session conf is restored immediately after .start()) from the
     source size: ``input_bytes / 4 MB`` clamped to [4, session shuffle
-    partitions]; callers pass ``input_bytes=fixture_bytes(sf_dir, ...)``.
-    $SPARK_GRAFT_STREAM_SHUFFLE overrides unconditionally; with neither,
-    the small-drain floor of 4 applies. Results are unaffected: every
-    drained query here is order-invariant by construction (decimal sums,
-    exact joins/dedup, quantized state). On a real cluster the session
-    shuffle-partition conf is O(total executor cores), so the cap scales
-    with the cluster instead of one machine."""
+    partitions]; callers pass ``input_bytes=fixture_bytes(sf_dir, ...)``;
+    without it the small-drain floor of 4 applies. Results are
+    unaffected: every drained query here is order-invariant by
+    construction (decimal sums, exact joins/dedup, quantized state). On a
+    real cluster the session shuffle-partition conf is O(total executor
+    cores), so the cap scales with the cluster instead of one machine."""
     spark = stream_df.sparkSession
-    import os as _os
 
     # A memory sink collects its FULL result to the driver and holds it for
     # the session lifetime; with monotone drain names nothing ever drops
@@ -381,20 +379,14 @@ def _drain_confs(spark: SparkSession, input_bytes: int | None, extra: dict | Non
       micro-batch materializes one state-store instance per shuffle
       partition per stateful operator, pure fixed cost on a small drain,
       needed parallelism on a big one: ``input_bytes / 4 MB`` clamped to
-      [4, session shuffle partitions], $SPARK_GRAFT_STREAM_SHUFFLE
-      overriding, floor 4 with neither.
+      [4, session shuffle partitions], floor 4 without ``input_bytes``.
     - Short-drain state-store tuning: background maintenance can never
       usefully fire inside a 1-2 micro-batch drain (pushed past its
       lifetime) and only the last commit is ever read back (retain 2).
       Isolated A/B on the stream-stream joins at sf0.1 (32-thread local):
       clamp 8 -> 4 plus these two confs took the warm interval-join
       drains from 2.7-3.3 s to 2.0-2.8 s (~15-20%)."""
-    import os as _os
-
-    env = _os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if env:
-        n_state = env
-    elif input_bytes:
+    if input_bytes:
         sess = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or 32)
         n_state = str(
             max(4, min(sess, input_bytes // _DRAIN_BYTES_PER_PARTITION))

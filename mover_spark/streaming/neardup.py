@@ -8,10 +8,10 @@ part of the streaming extension surface, like streaming/events.py.)
 Scale design — deliberately STATELESS:
 - The corpus index is LEAN: (doc, band, bucket, band-hash array) — 12
   rows of a few longs per doc, no text payload; at cluster scale it
-  lives as a bucketed table keyed by (band, bucket). Shingle arrays are
-  fetched by a SECOND stream-static join only for the few rows that
-  survive banding + emit-once — corpus text is never duplicated 12×
-  across band rows.
+  lives as a bucketed table keyed by (band, bucket). Hashed shingle
+  arrays are fetched by a SECOND stream-static join only for the few
+  rows that survive banding + emit-once — shingles are never duplicated
+  12× across band rows.
 - Each micro-batch shingles + minhashes its documents with THE SAME
   projection as batch (dedup.signature_projection — one definition, so
   stream and corpus band hashes can never drift apart), explodes
@@ -23,7 +23,8 @@ Scale design — deliberately STATELESS:
   signatures agree" is a pure per-row predicate (zip_with equality +
   array_position) — the same emit-once trick the batch interval-overlap
   join uses.
-- Survivors verify EXACT Jaccard on the two shingle arrays.
+- Survivors verify EXACT Jaccard on the two hashed shingle arrays (hs:
+  xxhash64 longs, as every batch verify), never on strings.
 Result: output is identical no matter how the stream is micro-batched,
 append-mode, zero state — so availableNow over the fixture equals the
 batch cross-side pair enumeration, which the DuckDB oracle checks
@@ -40,8 +41,9 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from mover_spark.operators.dedup import (
     LSH_BANDS,
     N_MINHASH,
-    _signatures,
+    _corpus_shingles,
     jaccard_col,
+    read_signature_index,
     signature_projection,
 )
 
@@ -86,10 +88,10 @@ def corpus_lsh_index(
 ) -> tuple[DataFrame, DataFrame]:
     """(index, shingles): the lean probe target — one (band, bucket) row
     per corpus doc per band carrying only the doc id and its band-hash
-    array — plus the (doc, shingles) side table verification joins
-    against AFTER emit-once pruning. Both build off the session
-    signature memo, so batch dedup consumers and the stream share one
-    signature pass per corpus.
+    array — plus the (doc, hashed shingles) side table verification joins
+    against AFTER emit-once pruning. Both build off the session's corpus
+    shingle relation (dedup._corpus_shingles), so batch dedup consumers
+    and the stream share one signature pass per corpus.
 
     With ``index_path`` (a dedup.write_signature_index location) the
     signature pass is LOADED from the persisted cross-run index instead
@@ -98,18 +100,16 @@ def corpus_lsh_index(
     parquet (constants are validated by read_signature_index, so a
     stale-format index raises rather than silently never colliding)."""
     if index_path is not None:
-        from mover_spark.operators.dedup import read_signature_index
-
-        sig, _ = read_signature_index(corpus.sparkSession, index_path)
+        sig, _ = read_signature_index(corpus.sparkSession, index_path, "doc")
     else:
-        sig = _signatures(corpus)
+        sig = _corpus_shingles(corpus)
     index = sig.select(
-        F.col("doc_id").alias("doc_corpus"), _band_hashes().alias("bh_c")
+        F.col("doc").alias("doc_corpus"), _band_hashes().alias("bh_c")
     ).select(
         "doc_corpus", "bh_c", F.posexplode("bh_c").alias("band", "bucket")
     )
     shingles = sig.select(
-        F.col("doc_id").alias("doc_corpus"), F.col("sh").alias("sh_c")
+        F.col("doc").alias("doc_corpus"), F.col("hs").alias("hs_c")
     )
     return index, shingles
 
@@ -127,11 +127,11 @@ def neardup_detect_stream(
         stream_docs.select(F.col("doc_id"), F.col("text"))
     ).select(
         F.col("doc_id").alias("doc_stream"),
-        F.col("sh").alias("sh_s"),
+        F.col("hs").alias("hs_s"),
         _band_hashes().alias("bh_s"),
     ).select(
         "doc_stream",
-        "sh_s",
+        "hs_s",
         "bh_s",
         F.posexplode("bh_s").alias("band", "bucket"),
     )
@@ -143,7 +143,7 @@ def neardup_detect_stream(
         joined.where(first_band == F.col("band") + 1)  # emit-once per pair
         .join(corpus_shingles, on=["doc_corpus"])      # late shingle fetch
         .withColumn(
-            "jaccard", F.round(jaccard_col(F.col("sh_s"), F.col("sh_c")), 6)
+            "jaccard", F.round(jaccard_col(F.col("hs_s"), F.col("hs_c")), 6)
         )
         .where(F.col("jaccard") >= threshold)
         .select("doc_stream", "doc_corpus", "jaccard")

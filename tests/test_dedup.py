@@ -120,11 +120,11 @@ def test_lsh_pipeline_memoization(spark):
     assert p1 is p2  # memo hit
     assert D.minhash_lsh_pairs(docs, threshold=0.5) is not p1  # param miss
     assert p1.storageLevel.useMemory  # persisted
-    assert len(memo.entries("signatures")) == 1  # one corpus -> one signature entry
+    assert len(memo.entries("shingles")) == 1  # one corpus -> one shingle entry
     assert [(r.doc_a, r.doc_b) for r in p1.collect()] == [(1, 2)]
 
     memo.clear()
-    assert not memo.entries("lsh_pairs") and not memo.entries("signatures")
+    assert not memo.entries("lsh_pairs") and not memo.entries("shingles")
     assert not p1.storageLevel.useMemory  # released
 
 
@@ -194,7 +194,7 @@ def test_dedup_against_base_exact_near_and_exemptions(spark):
 
     # a second increment against the SAME base plan reuses the memoized
     # base signatures (no new cache entry for the base side)
-    n_entries = len(memo.entries("signatures"))
+    n_entries = len(memo.entries("shingles"))
     new2 = spark.createDataFrame(
         [(7, "another brand new increment document arrives")],
         "doc_id long, text string",
@@ -202,7 +202,7 @@ def test_dedup_against_base_exact_near_and_exemptions(spark):
     kept2 = {r.doc_id for r in dedup_against_base(new2, base).collect()}
     assert kept2 == {7}
     # one NEW entry (new2's signatures); the base entry was reused
-    assert len(memo.entries("signatures")) == n_entries + 1
+    assert len(memo.entries("shingles")) == n_entries + 1
 
 
 def test_containment_pairs_asymmetric_and_lossless(spark, catalog):
@@ -391,6 +391,7 @@ def test_signature_index_rejects_mismatched_constants(spark, catalog, tmp_path):
     import pytest as _pytest
 
     from mover_spark.operators.dedup import (
+        SIG_INDEX_VERSION,
         read_signature_index,
         write_signature_index,
     )
@@ -399,7 +400,7 @@ def test_signature_index_rejects_mismatched_constants(spark, catalog, tmp_path):
     write_signature_index(catalog.df("documents").limit(5), path)
     # simulate a writer built with 64 perms: overwrite only the meta row
     spark.createDataFrame(
-        [(1, 64, 16, "doc_id", 5)],
+        [(SIG_INDEX_VERSION, 64, 16, "doc_id", 5)],
         "version int, n_minhash int, lsh_bands int, id_col string, n_docs long",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
     with _pytest.raises(ValueError, match="64 perms"):
@@ -606,23 +607,23 @@ def test_sig_cache_lru_bounded_and_unpersists(spark, catalog, monkeypatch):
     c1 = docs.where(F.col("doc_id") % 3 == 0)
     c2 = docs.where(F.col("doc_id") % 3 == 1)
     c3 = docs.where(F.col("doc_id") % 3 == 2)
-    s1 = dd._signatures(c1)
+    s1 = dd._corpus_shingles(c1)
     s1.count()
-    s2 = dd._signatures(c2)
+    s2 = dd._corpus_shingles(c2)
     s2.count()
-    assert len(memo.entries("signatures")) == 2
+    assert len(memo.entries("shingles")) == 2
     # a budget one byte short of the two materialized entries
     held = memo.stats()["resident_bytes"]
     assert held > 0
     monkeypatch.setattr(memo, "_budget_bytes", lambda sc: held - 1)
-    assert dd._signatures(c1) is s1  # hit refreshes recency
-    dd._signatures(c3)               # evicts c2 (now least recent), not c1
-    assert len(memo.entries("signatures")) == 2
-    assert dd._signatures(c1) is s1
+    assert dd._corpus_shingles(c1) is s1  # hit refreshes recency
+    dd._corpus_shingles(c3)               # evicts c2 (now least recent), not c1
+    assert len(memo.entries("shingles")) == 2
+    assert dd._corpus_shingles(c1) is s1
     assert not s2.storageLevel.useMemory and not s2.storageLevel.useDisk, (
         "evicted entry must be unpersisted"
     )
-    assert dd._signatures(c2) is not s2  # evicted -> rebuilt on demand
+    assert dd._corpus_shingles(c2) is not s2  # evicted -> rebuilt on demand
     memo.clear()
 
 
@@ -1075,7 +1076,8 @@ def test_freq_sorted_docs_shared_and_memoized(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     jac_cold = sorted(map(tuple, D.ngram_jaccard_pairs(df, 0.6).collect()))
     con_cold = sorted(map(tuple, D.containment_pairs(df, 0.6).collect()))
-    # both operators produced/consumed the SAME memo entry
+    # both operators produced/consumed the SAME memo entries
+    assert len(memo.entries("shingles")) == 1
     fs_entries = memo.entries("freqsorted_sh")
     assert len(fs_entries) == 1, f"expected one shared memo entry, got {fs_entries}"
     relation = fs_entries[0]
@@ -1289,12 +1291,11 @@ def test_dup_marked_memo_shared_and_spans_kernel_identical(spark):
 
 
 def test_shingle_udf_runs_once_per_doc(spark):
-    """All three shingle builds (the hashed shingles, the containment
-    representatives and the signature projection) evaluate the shingle UDF
-    once per doc (one ArrowEvalPython [sh(...)] node; a filter on the
-    shingle array itself is pushed below the projection and runs the UDF a
-    second time) and keep the rows of that filter on edge texts: null,
-    empty, one word, a double space, a trailing space."""
+    """The corpus shingle relation evaluates the shingle UDF once per doc
+    (one ArrowEvalPython [sh(...)] node; a filter on the shingle array
+    itself is pushed below the projection and runs the UDF a second time)
+    and keeps the rows of that filter on edge texts: null, empty, one
+    word, a double space, a trailing space."""
     from mover_spark.operators import dedup as D
 
     memo.clear()
@@ -1311,19 +1312,52 @@ def test_shingle_udf_runs_once_per_doc(spark):
         .collect()
     )
     assert sorted(r.doc for r in want) == [4, 5, 6, 7]
-    shingles = D._hashed_shingles(df)
-    tagged = D._containment_reps(df)[0]
+    relation = D._corpus_shingles(df)
+    plan = relation._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython [sh(") == 1, plan
+    assert plan.count("ArrowEvalPython [sig(") == 1, plan  # one minhash pass
+    assert sorted((r.doc, r.hs) for r in relation.collect()) == sorted(map(tuple, want))
     projection = D.signature_projection(df)
-    for built in (shingles, tagged, projection):
-        plan = built._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("ArrowEvalPython [sh(") == 1, plan
-    assert sorted(map(tuple, shingles.collect())) == sorted(map(tuple, want))
-    want_sh = df.select("doc_id", D.shingles_udf()(F.col("text")).alias("sh"))
-    assert sorted((r.doc_id, r.sh) for r in projection.collect()) == sorted(
-        (r.doc_id, r.sh) for r in want_sh.collect() if r.sh
-    )
+    assert sorted((r.doc_id, r.hs) for r in projection.collect()) == sorted(map(tuple, want))
     # docs 6 and 7 share a shingle set: one representative
+    tagged = D._containment_reps(df)[0]
     assert sorted(map(tuple, tagged.collect())) == sorted(
         (r.doc, r.hs) for r in want if r.doc != 7
     )
+    memo.clear()
+
+
+def test_one_shingle_pass_per_corpus(spark, catalog, monkeypatch):
+    """MinHash pairs, LSH containment, exact n-gram Jaccard and
+    doc_novelty on one corpus shingle it once: the shingle UDF sees each
+    doc with at least two tokens exactly once, however many of the
+    family's operators read the corpus."""
+    import pandas as pd
+
+    from mover_spark.operators import dedup as D
+    from mover_spark.operators.text import doc_novelty
+
+    seen = spark.sparkContext.accumulator(0)
+    real = D.shingles_udf
+
+    def counting_shingles_udf(n: int = 2):
+        kernel = real(n).func
+
+        @F.pandas_udf("array<string>")
+        def sh(text: pd.Series) -> pd.Series:
+            seen.add(len(text))
+            return kernel(text)
+
+        return sh
+
+    monkeypatch.setattr(D, "shingles_udf", counting_shingles_udf)
+    memo.clear()
+    docs = catalog.df("documents")
+    D.minhash_lsh_pairs(docs, 0.8).collect()
+    D.containment_lsh(docs, 0.9).collect()
+    D.ngram_jaccard_pairs(docs, 0.8).collect()
+    doc_novelty(docs).collect()
+    n_docs = docs.where(F.size(F.split("text", " ")) >= 2).count()
+    assert n_docs > 0
+    assert seen.value == n_docs
     memo.clear()

@@ -16,6 +16,7 @@ Exit code 0 = every query ran; 1 = at least one raised.
 from __future__ import annotations
 
 import argparse
+import glob
 import os
 import shutil
 import sys
@@ -36,6 +37,16 @@ def make_empty_mirror(spark, dest: str) -> None:
         df.limit(0).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(dest, name)
         )
+
+
+def remove_query_fixtures(dest: str) -> None:
+    """Remove the index and snapshot dirs the queries built for the empty
+    mirror: they are keyed by its basename, under /tmp/mover_spark_*/
+    (the signature indexes one level deeper, under a format version)."""
+    name = os.path.basename(dest)
+    for pattern in ("/tmp/mover_spark_*/", "/tmp/mover_spark_*/*/"):
+        for path in glob.glob(pattern + name):
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def main() -> int:
@@ -67,6 +78,7 @@ def main() -> int:
                 print(f"FAIL  {name:42s} {last}", flush=True)
     finally:
         shutil.rmtree(dest, ignore_errors=True)
+        remove_query_fixtures(dest)
         spark.stop()
 
     print(f"\n{len(failures)} failures / {len(qs)} queries")
