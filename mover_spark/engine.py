@@ -21,7 +21,7 @@ from .config import MoverConfig
 from .operators.closure import extract_closure
 from .operators.sanitize import sanitize_df
 from .sources import jsonio
-from .util import get_query_table
+from .util import get_query_table, map_concurrent
 
 
 class Engine:
@@ -47,6 +47,10 @@ class Engine:
     ) -> dict[str, DataFrame]:
         """Seed query -> closure -> sanitize -> envelopes (engine.go:104-134).
 
+        The tables' sanitize + envelope writes run concurrently
+        (``map_concurrent``), sharing the session's task slots; the media
+        URL union is built afterwards, in table order.
+
         Default is the scale-safe partitioned envelope (parallel executor
         writers, nothing collected to the driver — a 100 TB closure cannot
         OOM the driver the way the reference's in-RAM extractor can,
@@ -63,16 +67,18 @@ class Engine:
             self.spark, self.catalog, seeds, self.config.schema_configs()
         )
 
-        results: dict[str, DataFrame] = {}
-        media_dfs: list[DataFrame] = []
-        for tname, df in extracted.items():
-            rules = self.config.column_rules(tname)
-            pks = self.catalog.table(tname).primary_keys
-            clean = sanitize_df(df, rules, pks, locale=self.config.locale,
-                                dedup=self.catalog.table(tname).pk_unique)
-            results[tname] = clean
+        def write(item: tuple[str, DataFrame]) -> DataFrame:
+            tname, df = item
+            meta = self.catalog.table(tname)
+            clean = sanitize_df(df, self.config.column_rules(tname), meta.primary_keys,
+                                locale=self.config.locale, dedup=meta.pk_unique)
             jsonio.write_envelope(clean, tname, out_dir, partitioned=partitioned)
-            udf = self._media_urls_df(clean, rules)
+            return clean
+
+        results = dict(zip(extracted, map_concurrent(self.spark, write, extracted.items())))
+        media_dfs: list[DataFrame] = []
+        for tname, clean in results.items():
+            udf = self._media_urls_df(clean, self.config.column_rules(tname))
             if udf is not None:
                 media_dfs.append(udf)
         if media_dfs:
@@ -256,13 +262,18 @@ class Engine:
         ignored) or "update" (last-write-wins merge, a refresh capability
         the reference lacks: DO UPDATE on the DB path, existing-row
         replacement on the file path).
-        Load order is alphabetical like the reference's directory walk —
-        survivable because constraints are not enforced during the write (the
-        reference disables triggers for the same reason)."""
+        A DSN target loads one table at a time, alphabetically like the
+        reference's directory walk — survivable because constraints are not
+        enforced during the write (the reference disables triggers for the
+        same reason). A file target's tables are independent paths, so they
+        load concurrently (``map_concurrent``), sharing the session's task
+        slots; the envelopes are read the same way."""
         payloads = jsonio.read_envelopes(self.spark, in_dir)
-        out: dict[str, DataFrame] = {}
         live_tables: dict | None = None
-        for tname in sorted(payloads):
+
+        def keyed(tname: str) -> tuple[DataFrame, list[str], bool]:
+            """The table's coerced, PK-deduped batch, its PK and pk_unique."""
+            nonlocal live_tables
             df = payloads[tname]
             if tname in self.catalog.tables:
                 df = jsonio.coerce_to_schema(df, self.catalog.df(tname))
@@ -303,30 +314,45 @@ class Engine:
             # only on a real unique constraint, which such tables don't have).
             if pk_unique:
                 df = df.dropDuplicates(pks)
-            out[tname] = df
-            if dsn is not None:
-                from .sources.jdbc import bulk_upsert
+            return df, pks, pk_unique
 
+        tables = sorted(payloads)
+        if dsn is not None:
+            # one table at a time: each upsert is bracketed by trigger
+            # disable/enable DDL on the live database
+            from .sources.jdbc import bulk_upsert
+
+            out: dict[str, DataFrame] = {}
+            for tname in tables:
+                df, pks, pk_unique = keyed(tname)
+                out[tname] = df
                 bulk_upsert(df, dsn, tname, pks,
                             connection_factory=connection_factory,
                             partition_writer=partition_writer,
                             on_conflict=on_conflict,
                             pk_unique=pk_unique)
-            elif target_dir is not None:
-                dest = os.path.join(target_dir, f"{tname}.parquet")
-                if not os.path.exists(dest):
-                    df.write.parquet(dest)
-                elif on_conflict == "update":
-                    # last-write-wins merge: incoming rows replace same-PK
-                    # existing rows. localCheckpoint materializes the merge
-                    # off the source files so overwriting the path we read
-                    # from is safe.
-                    existing = self.spark.read.parquet(dest)
-                    kept = existing.join(df.select(*pks), on=pks, how="left_anti")
-                    merged = kept.select(*df.columns).unionByName(df).localCheckpoint()
-                    merged.write.mode("overwrite").parquet(dest)
-                else:
-                    existing = self.spark.read.parquet(dest)
-                    fresh = df.join(existing, on=pks, how="left_anti")
-                    fresh.write.mode("append").parquet(dest)
-        return out
+            return out
+
+        def write(tname: str) -> DataFrame:
+            df, pks, _ = keyed(tname)
+            if target_dir is None:
+                return df
+            dest = os.path.join(target_dir, f"{tname}.parquet")
+            if not os.path.exists(dest):
+                df.write.parquet(dest)
+            elif on_conflict == "update":
+                # last-write-wins merge: incoming rows replace same-PK
+                # existing rows. localCheckpoint materializes the merge
+                # off the source files so overwriting the path we read
+                # from is safe.
+                existing = self.spark.read.parquet(dest)
+                kept = existing.join(df.select(*pks), on=pks, how="left_anti")
+                merged = kept.select(*df.columns).unionByName(df).localCheckpoint()
+                merged.write.mode("overwrite").parquet(dest)
+            else:
+                existing = self.spark.read.parquet(dest)
+                fresh = df.join(existing, on=pks, how="left_anti")
+                fresh.write.mode("append").parquet(dest)
+            return df
+
+        return dict(zip(tables, map_concurrent(self.spark, write, tables)))

@@ -27,9 +27,10 @@ memoization when queries are generated from keys.
 
 Scale: rounds are bounded by the FK-graph diameter, not the row count. A
 round unions its semi-join fetches per target table and materializes each
-union once, as an eager local checkpoint whose row count is observed on the
-same job (no emptiness probe). Seen keys are projections of those
-checkpoints, so no round's plan embeds an earlier one: plans keep a
+union once, the round's targets concurrently (their small jobs share the
+session's task slots), as an eager local checkpoint whose row count is
+observed on the same job (no emptiness probe). Seen keys are projections of
+those checkpoints, so no round's plan embeds an earlier one: plans keep a
 constant size at any depth.
 """
 
@@ -44,6 +45,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
+from ..util import map_concurrent
 
 log = logging.getLogger(__name__)
 
@@ -364,9 +366,14 @@ def extract_closure(
                         if qtable in catalog.tables:
                             frontiers.append(_Frontier(qtable, sub, seed=False))
 
-        # one materialization per target table per round
-        for target, paths in wanted.items():
-            fetched, n = _fetch(catalog, seen, target, paths)
+        # one materialization per target table per round, the targets'
+        # fetches run side by side: _fetch writes only seen[(target, ...)],
+        # and one round's targets are distinct, so no two calls touch the
+        # same key set
+        fetches = map_concurrent(
+            spark, lambda tp: _fetch(catalog, seen, *tp), list(wanted.items())
+        )
+        for target, (fetched, n) in zip(wanted, fetches):
             log.debug("closure round %d: %s +%d rows", iteration, target, n)
             if n:
                 _extracted(target, fetched)

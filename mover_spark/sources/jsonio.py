@@ -21,6 +21,8 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import map_concurrent
+
 ENVELOPE_MANIFEST = "_envelope.json"
 
 
@@ -85,26 +87,28 @@ def write_envelope(
 def read_envelopes(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """Walk `path`, decode every envelope (single-file or partitioned),
     return {table_name: DataFrame} — loader.Load semantics
-    (etl/loader.go:25-72), set-at-a-time."""
-    out: dict[str, DataFrame] = {}
-    for entry in sorted(os.listdir(path)):
+    (etl/loader.go:25-72), set-at-a-time. Each entry's JSON schema
+    inference is a Spark job of its own; the entries are read concurrently
+    (``map_concurrent``) so those jobs share the session's task slots."""
+
+    def read(entry: str) -> tuple[str, DataFrame] | None:
         full = os.path.join(path, entry)
         if entry.endswith(".json") and os.path.isfile(full):
             with open(full) as f:
                 payload = json.load(f)
-            table = payload["table_name"]
             # schema-less read of embedded rows; loader re-coerces against
             # the catalog downstream (postgres/util.go:29-107 equivalent)
             df = spark.read.json(
                 spark.sparkContext.parallelize([json.dumps(r) for r in payload["data"]])
             )
-            out[table] = df
-        elif os.path.isdir(full) and os.path.exists(os.path.join(full, ENVELOPE_MANIFEST)):
+            return payload["table_name"], df
+        if os.path.isdir(full) and os.path.exists(os.path.join(full, ENVELOPE_MANIFEST)):
             with open(os.path.join(full, ENVELOPE_MANIFEST)) as f:
                 manifest = json.load(f)
-            df = spark.read.json(os.path.join(full, "part-*"))
-            out[manifest["table_name"]] = df
-    return out
+            return manifest["table_name"], spark.read.json(os.path.join(full, "part-*"))
+        return None
+
+    return dict(r for r in map_concurrent(spark, read, sorted(os.listdir(path))) if r)
 
 
 def coerce_to_schema(df: DataFrame, target: DataFrame) -> DataFrame:

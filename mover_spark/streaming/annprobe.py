@@ -161,26 +161,32 @@ def ann_probe_stream(
                 sample,
                 k=k,
             )
-            hits = (
+            # one action: the exact top-k left-joined with the sampled
+            # queries' probed pairs gives the exact total, the hits and the
+            # query count together. Queries are counted directly, not as
+            # total/k: a sampled query with fewer than k exact neighbors
+            # (index < k+1 rows, zero-norm or self-excluded vectors) would
+            # make the ratio undercount (ADVICE r11)
+            probed = (
                 out.join(
                     sample.select(F.col("vec_id").alias("query_id")),
                     "query_id",
                     "left_semi",
                 )
-                .join(
-                    exact.select("query_id", "neighbor_id"),
-                    ["query_id", "neighbor_id"],
-                    "left_semi",
-                )
-                .count()
+                .select("query_id", "neighbor_id", F.lit(True).alias("hit"))
+                .distinct()
             )
-            total = exact.count()
+            total, hits, n_queries = (
+                exact.select("query_id", "neighbor_id")
+                .join(probed, ["query_id", "neighbor_id"], "left")
+                .agg(
+                    F.count(F.lit(1)),
+                    F.count("hit"),
+                    F.countDistinct("query_id"),
+                )
+                .first()
+            )
             recall = (hits / total) if total else 1.0
-            # count queries directly, not total/k: a sampled query with
-            # fewer than k exact neighbors (index < k+1 rows, zero-norm
-            # or self-excluded vectors) would make the ratio undercount
-            # (ADVICE r11); one cheap action on the already-computed frame
-            n_queries = exact.select("query_id").distinct().count()
             spark.createDataFrame(
                 [
                     (

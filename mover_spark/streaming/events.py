@@ -439,6 +439,11 @@ def _rocksdb_threshold_bytes(spark) -> int:
         )
     except Exception:
         heap = 16 << 30  # conservative default matching the bench session
+    return _rocksdb_threshold_for_heap(heap)
+
+
+def _rocksdb_threshold_for_heap(heap: int) -> int:
+    """The RocksDB switch point for a JVM heap of `heap` bytes: heap/16."""
     return heap // 16
 
 #: temp dirs of past run_to_files drains — kept for the session (returned

@@ -1,8 +1,9 @@
-"""Small parity helpers."""
+"""Small parity helpers, and the one way to run Spark jobs side by side."""
 
 from __future__ import annotations
 
 import re
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
 
 def md5_i64(col, chars: int = 15):
@@ -108,3 +109,32 @@ def recover_staged_swap(spark, base: str, name: str) -> None:
         if fs.exists(cand):
             fs.rename(cand, cur)
             return
+
+
+def map_concurrent(spark, fn, items) -> list:
+    """``[fn(x) for x in items]``, with the calls run side by side on
+    ``min(len(items), defaultParallelism)`` driver threads, so the small
+    Spark jobs they launch share the session's task slots instead of
+    queueing one after another (Spark runs jobs submitted from separate
+    threads concurrently). Results come back in input order.
+
+    Each call is wrapped by ``inheritable_thread_target(spark)`` here, at
+    call time, so it runs under the caller's job group, description and
+    tags; wrapping once per item gives every thread its own copy of the
+    local properties. On failure the calls not yet started are cancelled
+    and the first exception in input order is raised, but only after
+    every started call has returned: no job outlives the helper."""
+    from pyspark.util import inheritable_thread_target
+
+    items = list(items)
+    if not items:
+        return []
+    width = min(len(items), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn), x) for x in items]
+        wait(futures, return_when=FIRST_EXCEPTION)
+        for f in futures:
+            f.cancel()  # no-op once started
+    # the pool starts calls in input order, so a raising call comes before
+    # any cancelled one
+    return [f.result() for f in futures]

@@ -496,3 +496,34 @@ def test_closure_matches_python_bfs(spark, tmp_path, graph):
         if ids:
             got[t] = set(ids)
     assert got == _closure_bfs(tables, seed_table, seed_ids, allow)
+
+
+def test_key_sets_concurrent_disjoint_adds(spark):
+    """One closure round's fetches run side by side and each adds only to
+    its own target's key sets. Under a short thread switch interval, many
+    concurrent adds to disjoint keys lose none (a lost update would drop
+    a seen key and refetch its rows)."""
+    import sys
+
+    from mover_spark.operators.closure import _KeySets
+    from mover_spark.util import map_concurrent
+
+    class Keys(list):
+        def unionByName(self, other):
+            return Keys(self + other)
+
+    seen, n, adds = _KeySets(), 64, 50
+
+    def add(i):
+        for j in range(adds):
+            seen.add(f"t{i}", ["k"], Keys([j]))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        map_concurrent(spark, add, range(n))
+    finally:
+        sys.setswitchinterval(interval)
+    assert {k: sorted(v) for k, v in seen._sets.items()} == {
+        (f"t{i}", ("k",)): list(range(adds)) for i in range(n)
+    }

@@ -425,14 +425,20 @@ def test_rocksdb_threshold_adapts_to_heap(spark, monkeypatch):
     RocksDB."""
     import os
 
-    from mover_spark.streaming.events import _rocksdb_threshold_bytes
+    from mover_spark.streaming.events import (
+        _rocksdb_threshold_bytes,
+        _rocksdb_threshold_for_heap,
+    )
 
     monkeypatch.delenv("MOVER_SPARK_ROCKSDB_BYTES", raising=False)
     thresh = _rocksdb_threshold_bytes(spark)
     heap = int(spark._jvm.java.lang.Runtime.getRuntime().maxMemory())
     assert thresh == heap // 16
-    assert 410 << 20 < thresh, "sf10 dedup (2x205MB) must stay in-heap at 16g"
-    assert int(1.7 * (1 << 30)) > thresh, "the measured-fatal sf100 session input must go to RocksDB"
+    # the sf10/sf100 bounds were measured on a 16g heap: check them there,
+    # not at whatever heap this host's session happens to get
+    at16g = _rocksdb_threshold_for_heap(16 << 30)
+    assert 410 << 20 < at16g, "sf10 dedup (2x205MB) must stay in-heap at 16g"
+    assert int(1.7 * (1 << 30)) > at16g, "the measured-fatal sf100 session input must go to RocksDB"
     monkeypatch.setenv("MOVER_SPARK_ROCKSDB_BYTES", "123")
     assert _rocksdb_threshold_bytes(spark) == 123
 
@@ -523,3 +529,44 @@ def test_recall_monitor_counts_queries_with_few_neighbors(spark, tmp_path):
     assert len(obs) == 1
     assert obs[0].n_queries == 4, obs  # NOT 12 // 5 == 2
     assert obs[0].recall == 1.0 and not obs[0].flagged
+
+
+def test_recall_monitor_is_one_aggregate(spark, tmp_path):
+    """The recall monitor evaluates the brute-force exact top-k in ONE
+    action (a left join of the sampled probed pairs, aggregated as total,
+    hits and distinct queries), not three counts over it. Counted by the
+    drain's job group (its runId) through statusTracker: a monitored
+    one-batch drain launches fewer extra jobs than the 19 the three-count
+    monitor took on this geometry (the aggregate takes 9)."""
+    from mover_spark.operators.similarity import write_ann_index
+    from mover_spark.streaming.annprobe import ann_probe_stream, read_probe_recall
+
+    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
+    corpus = spark.createDataFrame(
+        [(100 + i, [0.71 + i * 1e-4, 0.70, 0.0, 0.0], 0) for i in range(20)]
+        + [(200 + i, [0.05, 1.0, 0.3 + i * 1e-3, 0.0], 1) for i in range(20)],
+        "vec_id long, embedding array<double>, label int",
+    )
+    queries = spark.createDataFrame(
+        [(i, [0.69, 0.72, 0.0, 0.0], 0) for i in range(8)],
+        "vec_id long, embedding array<double>, label int",
+    )
+    path = str(tmp_path / "annidx_jobs")
+    write_ann_index(corpus, path, m=2, n_codes=8, centroids=cents)
+    src = str(tmp_path / "qsrc_jobs")
+    queries.coalesce(1).write.parquet(src)
+    tracker = spark.sparkContext.statusTracker()
+
+    def drain_jobs(name, sample):
+        stream = spark.readStream.schema(corpus.schema).parquet(src)
+        q = ann_probe_stream(
+            stream, path, str(tmp_path / f"out_{name}"), str(tmp_path / f"ckpt_{name}"),
+            k=5, refine=4, n_probe=1, recall_sample=sample, recall_floor=0.8,
+        )
+        return len(tracker.getJobIdsForGroup(str(q.runId)))
+
+    plain = drain_jobs("plain", 0)
+    monitored = drain_jobs("monitored", 8)
+    assert 0 < monitored - plain < 19, (plain, monitored)
+    obs = read_probe_recall(spark, str(tmp_path / "out_monitored")).collect()
+    assert len(obs) == 1 and obs[0].n_queries == 8 and obs[0].flagged, obs
