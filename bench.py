@@ -11,8 +11,12 @@ per-query timings into the line, which overflowed the driver's capture and
 left four rounds of perf evidence unparsed.
 
 Each query is timed $SPARK_GRAFT_BENCH_REPS times (default 3) and the
-MEDIAN is reported, so one-off cold-start attribution (JIT/codegen warm-up
-landing on whichever query runs first) can't masquerade as a regression.
+MEDIAN is reported, so one-off cold-start attribution (JIT warm-up landing on
+whichever query runs first) can't masquerade as a regression. Rep 1 also
+compiles the query's whole-stage codegen classes; the session's codegen cache
+holds the suite's working set (``session.CODEGEN_CACHE_ENTRIES``), so reps 2-3
+reuse them. The line's ``per_query_first`` gives the rep-1 seconds, and the
+detail file's ``codegen_compiles`` the classes each rep compiled.
 
 Materialization is a noop-sink write — full computation of every output
 column, no driver-side collect bottleneck.
@@ -38,6 +42,13 @@ REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 def materialize(df) -> int:
     df.write.format("noop").mode("overwrite").save()
     return 0
+
+
+def codegen_compiles(spark) -> int:
+    """Classes whole-stage codegen has compiled in this JVM so far (each one
+    a miss of Spark's codegen cache)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def main() -> None:
@@ -66,7 +77,9 @@ def main() -> None:
     # Fixed warm-up protocol at the smallest fixture: one query per
     # execution mode (whole-stage codegen agg, Arrow pandas-UDF, Structured
     # Streaming micro-batch) so first-use JIT/interpreter startup lands here
-    # instead of inflating whichever suite query runs that mode first.
+    # instead of inflating whichever suite query runs that mode first. The
+    # warm-ups do not cover a suite query's own codegen classes: its rep 1
+    # compiles them, and reps 2-3 find them in the codegen cache.
     all_qs = entrymod.queries()  # warm-ups run even under a _BENCH_ONLY subset
     for warm in (
         "q1_pricing_summary",      # whole-stage codegen agg
@@ -131,6 +144,7 @@ def main() -> None:
     # isolates.
 
     runs: dict[str, list[float]] = {}
+    compiles: dict[str, list[int]] = {}
     timings: dict[str, float] = {}
     load: dict[str, list[float] | None] = {}
     steal: dict[str, int | None] = {}
@@ -140,17 +154,21 @@ def main() -> None:
         load[name] = loadavg()  # host noise sampled at each query's start
         s0 = steal_jiffies()
         samples: list[float] = []
+        compiled: list[int] = []
         for _ in range(reps):
+            c0 = codegen_compiles(spark)
             t0 = time.time()
             try:
                 materialize(fn(spark, sf_dir))
                 samples.append(round(time.time() - t0, 3))
+                compiled.append(codegen_compiles(spark) - c0)
             except Exception as exc:  # a broken query must not sink the suite
                 print(f"BENCH ERROR {name}: {exc}", file=sys.stderr)
                 break
         s1 = steal_jiffies()
         steal[name] = (s1 - s0) if (s0 is not None and s1 is not None) else None
         runs[name] = samples
+        compiles[name] = compiled
         timings[name] = round(statistics.median(samples), 3) if len(samples) == reps else -1.0
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
@@ -185,6 +203,7 @@ def main() -> None:
                 "movers_mode_mismatch": mode_mismatch,
                 "cold": cold,
                 "memo": memo.stats(),
+                "codegen_compiles": compiles,
             },
             f,
             indent=1,
@@ -233,6 +252,9 @@ def main() -> None:
             # the capture in rounds 9-12. Reps/loadavg/steal stay in the
             # detail file.
             "per_query": timings,
+            # rep-1 seconds: first-use cost (memo builds, codegen compiles)
+            # that the median hides; -1.0 when rep 1 failed
+            "per_query_first": {n: (r[0] if r else -1.0) for n, r in runs.items()},
             "detail": os.path.basename(detail_path),
             "loadavg": loadavg(),
             "movers_gt_1.5x": sorted(movers),

@@ -2,6 +2,8 @@
 
 import os
 
+from pyspark.sql import functions as F
+
 from mover_spark.session import default_cpus, driver_memory, tune
 
 
@@ -54,3 +56,22 @@ def test_tune_sizes_shuffles_to_task_slots(spark):
         assert spark.conf.get(key) == slots
     finally:
         spark.conf.set(key, slots)
+
+
+def test_codegen_cache_holds_a_pass_of_distinct_plans(spark):
+    # 150 plans whose generated classes differ only in inlined literals:
+    # more than Spark's default cache of 100 holds, so an LRU at the
+    # default misses every one of them again in the second round
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    plans = [
+        spark.range(8).select((F.col("id") * k + k).alias("x")).where(F.col("x") > k)
+        for k in range(1_000_003, 1_000_153)
+    ]
+    counts = []
+    for _ in range(2):
+        c0 = metrics.METRIC_COMPILATION_TIME().getCount()
+        for df in plans:
+            df.collect()
+        counts.append(metrics.METRIC_COMPILATION_TIME().getCount() - c0)
+    assert counts[0] >= len(plans)  # each plan compiled at least one class
+    assert counts[1] <= 5, counts
